@@ -1,6 +1,7 @@
 """Benchmark harness (driver contract): runs the headline operators at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line:
+(default: the CPUs this process may run on, as ``nproc`` counts them) and
+prints ONE JSON line:
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -27,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 BATTERY_DOCS = int(os.environ.get("OKAY_BENCH_DOCS", "6000000"))
 ACC_DOCS = int(os.environ.get("OKAY_BENCH_ACC_DOCS", "400000"))
 

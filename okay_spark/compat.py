@@ -37,7 +37,7 @@ from pyspark.sql.types import (
 
 from .errors import SchemaError
 from .messages import Message, expected_json
-from .paths import ELEM, ROOT, Name, Step, parse_path
+from .paths import ELEM, ROOT, ROW_KEY, Name, Step, parse_path
 from .rules import _STRING_TYPES, VIOL_ARRAY_DDL
 from .schema import CompiledSchema, Rule
 
@@ -325,8 +325,8 @@ def custom_violation_arrays(
         steps = parse_path(path)
         rebuild = None
         if path == ROOT:
-            top_dt: DataType = df_schema
-            inner = F.struct(*[F.col("`" + c + "`").alias(c) for c in df_schema.names])
+            top_dt: DataType = StructType([f for f in df_schema.fields if f.name != ROW_KEY])
+            inner = F.struct(*[F.col("`" + c + "`").alias(c) for c in top_dt.names])
             base_path, rest = ROOT, []
         else:
             head = steps[0]

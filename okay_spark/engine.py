@@ -44,7 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
-from .paths import ELEM, ROOT, Name, Step, child_key, parent_and_child, parse_path
+from .paths import ELEM, ROOT, ROW_KEY, Name, Step, child_key, parent_and_child, parse_path
 from .rules import (
     _STRING_TYPES,
     empty_violations,
@@ -230,6 +230,8 @@ def _extra_expr(
     parts: list[Column] = []
     if isinstance(dtype, StructType):
         for m in dtype.names:
+            if value is None and m == ROW_KEY:
+                continue
             child_fname = _join_fname(fname, m)
             child = _quoted(m) if value is None else value[m]
             cpath = F.lit(m) if value is None else F.concat(path, F.lit("."), F.lit(m))
@@ -366,7 +368,13 @@ def validate_dataframe(
     ``posexplode_outer`` so the whole battery stays inside whole-stage
     codegen (~5x faster than HOF evaluation); ``strategy='array'`` keeps the
     single-expression higher-order-function plan (one array per row — the
-    form summaries and streaming reuse). Identical violation semantics.
+    form :func:`okay_spark.checks.partition_summary`, ``rule_summary`` and
+    streaming build on). Identical violation semantics. The validation job
+    does not re-validate for its summaries: it rolls them up from this
+    function's explode output (see :mod:`okay_spark.state`).
+
+    The root column ``__ok_row`` (``paths.ROW_KEY``) is reserved for the
+    job's per-row key: it is never reported as an extra field.
     """
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
     if id_cols is None:
@@ -377,8 +385,8 @@ def validate_dataframe(
         # Measured across schema shapes (array-heavy, root-heavy, flat): the
         # posexplode whole-stage-codegen plan beats the HOF plan everywhere
         # (2-3x on array-heavy, ~1.4x even with no array rules at all), so
-        # 'auto' is simply 'explode'. 'array' remains selectable — summaries
-        # and streaming reuse its per-row violations_array form.
+        # 'auto' is simply 'explode'. 'array' remains selectable — the public
+        # summary functions and streaming use its per-row violations_array.
         strategy = "explode"
     if strategy == "explode":
         from .plan_exploded import exploded_violations

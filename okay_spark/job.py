@@ -4,11 +4,15 @@ runs on the cluster (north rule).
 One invocation = one resumable run over an input table of interleaved
 documents:
 
-1. rule battery  -> violations sink            (shuffle-free)
+1. rule battery  -> violations sink, evaluated ONCE (shuffle-free); the
+   per-partition and per-rule summaries roll up from that same battery
+   output, then lineage marks the partitions done -> resume skips them
 2. doc_id uniqueness (salted)                  (hash-aggregate shuffle)
 3. media_ref referential vs the media catalog  (broadcast | salted SMJ)
 4. per-column stats + drift vs a reference snapshot -> metrics sink
-5. per-partition pass/fail summaries + lineage -> resume skips done parts
+5. run metrics: the uniqueness/referential counts are observed on their
+   sink writes (no second execution); tiny driver-built sinks go through
+   io.local_frame (no Python worker tasks)
 
 Usage (cluster) — spark-submit's primary file must be a top-level script
 (relative imports have no parent package there), so the repo-root launcher
@@ -32,9 +36,9 @@ import argparse
 import json
 import time
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import Observation, SparkSession, functions as F
 
-from .checks import (
+from .checks import (  # noqa: F401  partition_summary, rule_summary: re-exported
     column_stats,
     drift_metrics,
     media_ref_violations,
@@ -43,7 +47,7 @@ from .checks import (
     uniqueness_violations,
 )
 from .engine import validate_dataframe
-from .io import read_table, write_table
+from .io import local_frame, read_table, write_table
 from .schema import compile_cached
 from .state import run_resumable_validation
 
@@ -81,22 +85,19 @@ def run_full_validation(
         lineage_target=f"{output}/lineage",
         run_id=run_id,
         snapshot=input_snapshot,
+        summaries_target=f"{output}/summaries",
     )
 
-    dup = uniqueness_violations(docs, "doc_id", salt_buckets=salt_buckets).withColumn(
-        "run_id", F.lit(run_id)
-    )
-    write_table(dup, f"{output}/violations_uniqueness", mode="append")
-    n_dup = dup.count()
+    dup = uniqueness_violations(docs, "doc_id", salt_buckets=salt_buckets)
+    n_dup = _write_counted(dup.withColumn("run_id", F.lit(run_id)), f"{output}/violations_uniqueness")
 
     refv = media_ref_violations(
         docs,
         catalog,
         broadcast=broadcast_catalog,
         salt_buckets=None if broadcast_catalog else salt_buckets,
-    ).withColumn("run_id", F.lit(run_id))
-    write_table(refv, f"{output}/violations_referential", mode="append")
-    n_ref = refv.count()
+    )
+    n_ref = _write_counted(refv.withColumn("run_id", F.lit(run_id)), f"{output}/violations_referential")
 
     stats = column_stats(docs.select("doc_id", partition_col)).withColumn("run_id", F.lit(run_id))
     write_table(stats, f"{output}/metrics_stats", mode="append")
@@ -107,18 +108,14 @@ def run_full_validation(
         sizes_ref = reference_snapshot.select(F.size("spans").cast("double").alias("n_spans"))
         drift = drift_metrics(sizes_cur, sizes_ref, "n_spans", bins=16)
         write_table(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(run_id, drift["column"], float(drift["psi"]), float(drift["ks"]))],
                 "run_id string, column string, psi double, ks double",
             ),
             f"{output}/metrics_drift",
             mode="append",
         )
-
-    summary = partition_summary(docs, compiled, partition_col).withColumn("run_id", F.lit(run_id))
-    write_table(summary, f"{output}/summaries", mode="append")
-    rules = rule_summary(docs, compiled, partition_col).withColumn("run_id", F.lit(run_id))
-    write_table(rules, f"{output}/summaries_by_rule", mode="append")
 
     metrics = {
         "run_id": run_id,
@@ -129,11 +126,19 @@ def run_full_validation(
         "drift": drift,
     }
     write_table(
-        spark.createDataFrame([(run_id, json.dumps(metrics, default=str))], "run_id string, metrics string"),
+        local_frame(spark, [(run_id, json.dumps(metrics, default=str))], "run_id string, metrics string"),
         f"{output}/run_metrics",
         mode="append",
     )
     return metrics
+
+
+def _write_counted(df, target: str) -> int:
+    """Append ``df`` to ``target`` and return the number of rows written,
+    observed on the write itself instead of executing the plan again."""
+    obs = Observation()
+    write_table(df.observe(obs, F.count(F.lit(1)).alias("n")), target, mode="append")
+    return obs.get["n"]
 
 
 def main() -> None:

@@ -19,6 +19,10 @@ from dataclasses import dataclass
 
 ROOT = "."
 
+# reserved root column: a per-row key the resumable job attaches so its
+# rollups can count failing rows; never a document field (no extra_field)
+ROW_KEY = "__ok_row"
+
 
 @dataclass(frozen=True)
 class Name:

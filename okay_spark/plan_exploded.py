@@ -41,7 +41,7 @@ from operator import and_, or_
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
-from .paths import ELEM, ROOT, Name, child_key, parent_and_child, parse_path
+from .paths import ELEM, ROOT, ROW_KEY, Name, child_key, parent_and_child, parse_path
 from .rules import (
     _STRING_TYPES,
     empty_violations,
@@ -426,6 +426,8 @@ def _extra_walk(
     at_root = value is None
     if isinstance(dtype, StructType):
         for m in dtype.names:
+            if at_root and m == ROW_KEY:
+                continue
             child_fname = _join_fname(fname, m)
             child = _q(m) if at_root else value[m]
             cpath = F.lit(m) if at_root else F.concat(path, F.lit("."), F.lit(m))

@@ -25,9 +25,11 @@ import hashlib
 import json
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .engine import validate_dataframe
-from .io import read_table, table_exists, write_table
+from .io import local_frame, read_table, table_exists, write_table
+from .paths import ROW_KEY
 from .schema import CompiledSchema, compile_cached
 
 LINEAGE_DDL = (
@@ -36,6 +38,15 @@ LINEAGE_DDL = (
     "status string, n_docs bigint, n_violations bigint, n_failed_docs bigint, "
     "fp bigint"
 )
+# the per-partition summary row after the typed partition column (the
+# columns and types checks.partition_summary produces, plus run_id)
+_SUMMARY_DDL = (
+    "n_docs bigint, n_violations bigint, n_failed_docs bigint, "
+    "pass_rate double, run_id string"
+)
+# typed partition value riding the per-partition doc counts (``part`` is
+# its string form, the lineage key)
+_PART_VALUE = "part_value"
 
 # order-independent content digests sum per-row 60-bit md5 values modulo
 # this Mersenne prime (2^61-1): commutative, overflow-free in decimal(38,0)
@@ -135,14 +146,30 @@ def partition_fingerprints(
     cross-engine replay matters (JSON formatting is engine-specific; the
     driver twin uses a ``concat_ws`` recipe both engines share).
     """
+    return df.groupBy(F.col(partition_col).cast("string").alias("part")).agg(
+        *_fingerprint_aggs(df, partition_col, content)
+    )
+
+
+def _fingerprint_aggs(df: DataFrame, partition_col: str, content) -> list:
     if content is None:
         content = F.to_json(
             F.struct(*[F.col(c) for c in df.columns if c != partition_col])
         )
     row_h = F.conv(F.substring(F.md5(content), 1, 15), 16, 10).cast("decimal(38,0)")
-    return df.groupBy(F.col(partition_col).cast("string").alias("part")).agg(
+    return [
         F.count(F.lit(1)).alias("n_docs"),
         F.pmod(F.sum(row_h), F.lit(_FP_MOD)).cast("bigint").alias("fp"),
+    ]
+
+
+def _by_partition(df: DataFrame, partition_col: str, *aggs) -> DataFrame:
+    """``(part, part_value, *aggs)``: grouped on the typed partition value,
+    keyed by its string form."""
+    return (
+        df.groupBy(F.col(partition_col).alias(_PART_VALUE))
+        .agg(*aggs)
+        .select(F.col(_PART_VALUE).cast("string").alias("part"), "*")
     )
 
 
@@ -180,12 +207,48 @@ def unchanged_partitions(
 
 
 def partition_doc_counts(df: DataFrame, partition_col: str) -> DataFrame:
-    """Per-partition row counts, reading ONLY the partition column (Catalyst
+    """Per-partition row counts ``(part, part_value, n)``: ``part`` is the
+    stringified partition value (the lineage key), ``part_value`` the typed
+    one (the summaries' key). Reads ONLY the partition column (Catalyst
     prunes the scan to ``struct<partition_col>``; on a hive/Iceberg-
     partitioned source it is pure partition metadata). The cheap half of the
     resumable run's scan budget — asserted by tests/test_pipeline_ops.py."""
-    part_str = F.col(partition_col).cast("string")
-    return df.groupBy(part_str.alias("part")).agg(F.count(F.lit(1)).alias("n"))
+    return _by_partition(df, partition_col, F.count(F.lit(1)).alias("n"))
+
+
+def _write_summaries(
+    battery: DataFrame, doc_counts: dict, part_field, run_id: str, target: str
+) -> None:
+    """``{target}`` and ``{target}_by_rule`` from the run's battery output:
+    the rows checks.partition_summary / checks.rule_summary give for the
+    validated partitions, plus run_id, without validating again.
+
+    A failed doc is a distinct ROW_KEY, not a distinct doc_id: duplicated
+    doc_ids whose copies both fail are two failed docs, as in
+    partition_summary."""
+    part = part_field.name
+    per_part = {
+        r["part"]: (r["n_violations"], r["n_failed_docs"])
+        for r in battery.groupBy(F.col(part).cast("string").alias("part"))
+        .agg(
+            F.count(F.lit(1)).alias("n_violations"),
+            F.count_distinct(ROW_KEY).alias("n_failed_docs"),
+        )
+        .collect()
+    }
+    rows = []
+    for key, (value, n_docs) in doc_counts.items():
+        n_viol, n_failed = per_part.get(key, (0, 0))
+        rows.append((value, n_docs, n_viol, n_failed, (n_docs - n_failed) / n_docs, run_id))
+    schema = StructType([part_field, *StructType.fromDDL(_SUMMARY_DDL).fields])
+    spark = battery.sparkSession
+    write_table(local_frame(spark, rows, schema), target, mode="append")
+    by_rule = (
+        battery.groupBy(part, "rule", "path")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .withColumn("run_id", F.lit(run_id))
+    )
+    write_table(by_rule, f"{target}_by_rule", mode="append")
 
 
 def run_resumable_validation(
@@ -198,9 +261,11 @@ def run_resumable_validation(
     run_id: str,
     snapshot: str = "",
     fingerprint_content=None,
+    summaries_target: str | None = None,
 ) -> dict:
-    """Validate only partitions not yet marked done; append violations and
-    lineage. Returns run metrics.
+    """Validate only partitions not yet marked done; append violations,
+    summaries (when ``summaries_target`` is given) and lineage. Returns run
+    metrics.
 
     Partition-granular idempotency: a crashed run re-appends nothing for
     partitions whose lineage row landed; interrupted partitions are re-run
@@ -217,6 +282,13 @@ def run_resumable_validation(
     for plain-parquet lakes; Iceberg sources get the same effect cheaper by
     passing the snapshot id.
 
+    ``summaries_target`` appends ``{summaries_target}`` (the rows of
+    :func:`okay_spark.checks.partition_summary`) and
+    ``{summaries_target}_by_rule`` (those of
+    :func:`okay_spark.checks.rule_summary`), each plus ``run_id``, for the
+    partitions this run validates — derived from the same battery output
+    as the violations sink, before the lineage rows mark them done.
+
     Scan budget (tests/test_pipeline_ops.py asserts it): ONE full-data scan
     per run — the violations write. The per-partition doc counts read only
     the partition column (or ride the fingerprint aggregate when
@@ -229,21 +301,23 @@ def run_resumable_validation(
     fp = schema_fingerprint(compiled)
 
     done = completed_partitions(spark, lineage_target, snapshot, fp)
-    current_fps: dict[str, tuple[int, int]] = {}
+    current_fps: dict[str, int] = {}
     if fingerprint_content is not None:
         content = None if fingerprint_content is True else fingerprint_content
-        current_fps = {
-            r["part"]: (r["n_docs"], r["fp"])
-            for r in partition_fingerprints(df, partition_col, content).collect()
-        }
+        fp_rows = _by_partition(
+            df, partition_col, *_fingerprint_aggs(df, partition_col, content)
+        ).collect()
+        current_fps = {r["part"]: r["fp"] for r in fp_rows}
         # content-identity REPLACES snapshot-identity: unchanged partitions
         # skip (even across snapshots); a stale 'done' whose bytes changed
         # falls out of the set and re-validates
-        done = unchanged_partitions(
-            spark, lineage_target, fp, {p: v[1] for p, v in current_fps.items()}
-        )
+        done = unchanged_partitions(spark, lineage_target, fp, current_fps)
     if done:
-        df = df.filter(~F.col(partition_col).cast("string").isin(*done))
+        key = F.col(partition_col).cast("string")
+        skip = key.isin(*[p for p in done if p is not None])
+        if None in done:
+            skip = skip | key.isNull()
+        df = df.filter(~F.coalesce(skip, F.lit(False)))
 
     # ONE full-data scan per run (round 1 scanned twice: once for the
     # partition summary, once for the violations write). Order of work:
@@ -253,28 +327,45 @@ def run_resumable_validation(
     #    metadata-weight) and doubles as the cheap emptiness check;
     # 2. the battery + violations write — the single full scan, with the
     #    partition value stamped on every violation row (per-partition
-    #    violation rows are themselves a north-rule deliverable);
+    #    violation rows are themselves a north-rule deliverable). The
+    #    battery output is persisted with a per-row key, so both summaries
+    #    roll up from it instead of validating again;
     # 3. the lineage metrics derive from the WRITTEN violations (sparse,
     #    already durable) joined driver-side with the doc counts — the source
-    #    table is not scanned again.
+    #    table is not scanned again. Lineage goes last: a crash before it
+    #    leaves the partitions to be re-run, never marked done unsummarized.
     if current_fps:
         # the fingerprint aggregate already counted every partition — no
         # second scan
-        doc_counts = {
-            p: n for p, (n, _) in current_fps.items() if p not in done
-        }
+        counts = [(r["part"], r[_PART_VALUE], r["n_docs"]) for r in fp_rows]
     else:
-        doc_counts = {
-            r["part"]: r["n"] for r in partition_doc_counts(df, partition_col).collect()
-        }
+        counts = [
+            (r["part"], r[_PART_VALUE], r["n"])
+            for r in partition_doc_counts(df, partition_col).collect()
+        ]
+    # part -> (typed partition value, n_docs)
+    doc_counts = {p: (v, n) for p, v, n in counts if p not in done}
     if not doc_counts:
         return {"run_id": run_id, "partitions": 0, "skipped": len(done), "n_docs": 0}
 
     id_cols = [c for c in df.columns if c == "doc_id"]
-    violations = validate_dataframe(
-        df, compiled, id_cols=[partition_col, *id_cols]
-    ).withColumn("run_id", F.lit(run_id))
-    write_table(violations, violations_target, mode="append")
+    battery = validate_dataframe(
+        df.withColumn(ROW_KEY, F.monotonically_increasing_id()),
+        compiled,
+        id_cols=[partition_col, *id_cols, ROW_KEY],
+    ).persist()
+    try:
+        write_table(
+            battery.drop(ROW_KEY).withColumn("run_id", F.lit(run_id)),
+            violations_target,
+            mode="append",
+        )
+        if summaries_target is not None:
+            _write_summaries(
+                battery, doc_counts, df.schema[partition_col], run_id, summaries_target
+            )
+    finally:
+        battery.unpersist()
 
     written = read_table(spark, violations_target).filter(F.col("run_id") == run_id)
     vaggs = [F.count(F.lit(1)).alias("n_violations")]
@@ -302,16 +393,16 @@ def run_resumable_validation(
             n_docs,
             viol_counts.get(part, (0, 0))[0],
             viol_counts.get(part, (0, 0))[1],
-            current_fps[part][1] if part in current_fps else None,
+            current_fps.get(part),
         )
-        for part, n_docs in sorted(doc_counts.items())
+        for part, (_, n_docs) in doc_counts.items()
     ]
-    write_table(spark.createDataFrame(lineage_rows, LINEAGE_DDL), lineage_target, mode="append")
+    write_table(local_frame(spark, lineage_rows, LINEAGE_DDL), lineage_target, mode="append")
     return {
         "run_id": run_id,
         "partitions": len(lineage_rows),
         "skipped": len(done),
-        "n_docs": sum(doc_counts.values()),
+        "n_docs": sum(n for _, n in doc_counts.values()),
         "n_violations": sum(v[0] for v in viol_counts.values()),
     }
 

@@ -86,3 +86,166 @@ def test_message_ordering_matches_okay(spark, okay_reference):
         doc = df.first().asDict(recursive=True)
         expect = [(m.type, m.field) for m in validate(ref, doc)]
         assert got == expect, f"{strategy}: {got} != {expect}"
+
+
+# --- one battery pass per job ---------------------------------------------------
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=lambda t: [(v is None, str(v)) for v in t])
+
+
+def _summary_input(spark):
+    """Partitions 0-2 carry the fixture's defects; a NULL partition; a clean
+    partition 7 with no violation at all; and, in partition 0, two rows with
+    the same doc_id that both fail."""
+    from okay_spark.fixtures import interleaved_documents
+
+    noisy = interleaved_documents(spark, 240, parts=3)
+    clean = interleaved_documents(spark, 30, parts=1, inject_errors=False)
+    null_part = interleaved_documents(spark, 20, parts=1).withColumn(
+        "part", F.lit(None).cast("int")
+    )
+    twins = (
+        clean.filter(F.col("doc_id").isin("doc-000000000001", "doc-000000000002"))
+        .withColumn("doc_id", F.lit("dup-fails"))
+        .withColumn("part", F.lit(0))
+    )
+    return noisy.unionByName(clean.withColumn("part", F.lit(7))).unionByName(
+        null_part
+    ).unionByName(twins)
+
+
+def test_job_summaries_equal_public_functions(spark, tmp_path):
+    """The job's summaries come from its one battery pass, not from
+    partition_summary/rule_summary; they must be the same rows and types."""
+    from okay_spark.checks import partition_summary, rule_summary
+    from okay_spark.fixtures import document_schema, media_catalog
+    from okay_spark.job import run_full_validation
+
+    docs = _summary_input(spark).cache()
+    out = str(tmp_path / "run")
+    run_full_validation(
+        spark, docs, media_catalog(spark, 1_000), document_schema, output=out, run_id="s1"
+    )
+
+    for sink, expected in [
+        ("summaries", partition_summary(docs, document_schema, "part")),
+        ("summaries_by_rule", rule_summary(docs, document_schema, "part")),
+    ]:
+        expected = expected.withColumn("run_id", F.lit("s1"))
+        got = spark.read.parquet(f"{out}/{sink}")
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in expected.schema
+        ], sink
+        assert _sorted_rows(got) == _sorted_rows(expected), sink
+
+    by_part = {r["part"]: r for r in spark.read.parquet(f"{out}/summaries").collect()}
+    assert set(by_part) == {0, 1, 2, 7, None}
+    assert by_part[7]["n_violations"] == 0 and by_part[7]["n_failed_docs"] == 0
+    # both copies of the duplicated doc_id fail: two failed docs, not one
+    viol0 = spark.read.parquet(f"{out}/violations").filter(F.col("part") == 0)
+    assert by_part[0]["n_failed_docs"] > viol0.select("doc_id").distinct().count()
+
+
+def test_row_key_is_invisible_to_validation(spark):
+    """The resumable run's reserved row key is never reported as an extra
+    field, on either battery strategy, nor shown to a root custom rule;
+    other undeclared columns are still extra fields."""
+    from okay_spark import ignore_extra_fields, required
+    from okay_spark.engine import validate_dataframe
+    from okay_spark.fixtures import interleaved_documents
+    from okay_spark.messages import Message
+    from okay_spark.paths import ROW_KEY
+
+    def strict():
+        required("doc_id", type="string", regex=r"doc-\d{12}")
+        required("spans", type="list", min=1)
+        required("spans[].kind", type="string", options=["text", "media"])
+
+    def lenient():
+        strict()
+        ignore_extra_fields()
+
+    def sees_row_key(field, value, **kw):
+        return Message(type="saw_row_key", field=field) if ROW_KEY in value else None
+
+    def root_custom():
+        lenient()
+        required(".", type="custom", validator=sees_row_key)
+
+    df = interleaved_documents(spark, 200, parts=2)
+    keyed = df.withColumn(ROW_KEY, F.monotonically_increasing_id())
+    for schema in (strict, lenient, root_custom):
+        for strategy in ("explode", "array"):
+            plain = _sorted_rows(validate_dataframe(df, schema, strategy=strategy))
+            got = _sorted_rows(validate_dataframe(keyed, schema, strategy=strategy))
+            assert got == plain, (schema.__name__, strategy)
+            extra = {r[1] for r in got if r[2] == "extra_field"}
+            assert not any(r[2] == "saw_row_key" for r in got)
+            if schema is not strict:
+                assert extra == set()
+            else:
+                assert "part" in extra and ROW_KEY not in extra, extra
+
+
+def test_job_resume_and_crash_order(spark, tmp_path, monkeypatch):
+    """Summaries cover exactly the partitions a run validates, and they land
+    before the lineage rows that mark those partitions done."""
+    import okay_spark.state as state
+    from okay_spark.fixtures import document_schema, interleaved_documents, media_catalog
+    from okay_spark.job import run_full_validation
+    from okay_spark.schema import compile_cached
+
+    docs = interleaved_documents(spark, 200, parts=4).cache()
+    catalog = media_catalog(spark, 1_000)
+    out = str(tmp_path / "run")
+
+    def run(frame, run_id):
+        return run_full_validation(
+            spark, frame, catalog, document_schema, output=out, run_id=run_id
+        )
+
+    def summary_parts(run_id):
+        return {
+            sink: sorted(
+                {r["part"] for r in spark.read.parquet(f"{out}/{sink}").filter(F.col("run_id") == run_id).collect()}
+            )
+            for sink in ("summaries", "summaries_by_rule")
+        }
+
+    run(docs.filter(F.col("part") < 2), "r1")
+    assert summary_parts("r1") == {"summaries": [0, 1], "summaries_by_rule": [0, 1]}
+    resumed = run(docs, "r2")
+    assert resumed["battery"]["partitions"] == 2 and resumed["battery"]["skipped"] == 2
+    assert summary_parts("r2") == {"summaries": [2, 3], "summaries_by_rule": [2, 3]}
+    skipped = run(docs, "r3")
+    assert skipped["battery"]["partitions"] == 0
+    assert summary_parts("r3") == {"summaries": [], "summaries_by_rule": []}
+
+    # a crash while writing lineage: summaries are durable, nothing is done
+    crash_out = str(tmp_path / "crash")
+    real_write = state.write_table
+
+    def failing_write(df, target, **kw):
+        if target.endswith("/lineage"):
+            raise RuntimeError("injected lineage fault")
+        return real_write(df, target, **kw)
+
+    monkeypatch.setattr(state, "write_table", failing_write)
+    try:
+        run_full_validation(
+            spark, docs, catalog, document_schema, output=crash_out, run_id="c1"
+        )
+    except RuntimeError as exc:
+        assert "injected lineage fault" in str(exc)
+    else:  # pragma: no cover
+        raise AssertionError("the injected fault did not fire")
+    monkeypatch.setattr(state, "write_table", real_write)
+    assert spark.read.parquet(f"{crash_out}/summaries").count() == 4
+    fp = state.schema_fingerprint(compile_cached(document_schema))
+    assert state.completed_partitions(spark, f"{crash_out}/lineage", "", fp) == set()
+    again = run_full_validation(
+        spark, docs, catalog, document_schema, output=crash_out, run_id="c2"
+    )
+    assert again["battery"]["partitions"] == 4
