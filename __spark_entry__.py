@@ -2738,9 +2738,11 @@ def q_prop_ztest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kendall_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall tau-b between hour-of-day and value ventile
+    """Kendall tau-b between hour-of-day and value/20 fixed-width buckets
     (okay_spark/checks.py kendall_tau_b). One (x, y) contingency
-    aggregate bounds the concordance self-join by 24 x 21 cells; exact
+    aggregate bounds the concordance self-join by 24 x (distinct buckets)
+    cells; the bucket count follows the data's value range (16, 21 and 27
+    at sf0.001, sf0.01 and sf0.1), not a fixed quantile grid; exact
     bigint pair products in decimal(38,0); tau one fixed IEEE
     expression — bit-identical DuckDB twin."""
     from okay_spark.checks import kendall_tau_b

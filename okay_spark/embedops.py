@@ -280,10 +280,18 @@ def embedding_outliers(
     deviations from its label's centroid is a wrong label, a truncated
     array, or an encoder glitch, and poisons every centroid-based
     downstream step (:func:`centroid_separation`, IVF assignment,
-    stratified sampling). Scores EVERY vector (the flag is a column, not
-    a filter, so thresholds can be re-derived downstream); labels with
-    zero distance variance (singleton or duplicated clusters) report
-    NULL z and never flag. No reference counterpart
+    stratified sampling). Scores the vectors of every label that has a
+    centroid (the flag is a column, not a filter, so thresholds can be
+    re-derived downstream). The inner join against the centroid frame
+    drops rows with a NULL label, and the rows of a label whose
+    embeddings are all NULL or empty (it has no centroid). A NULL or
+    empty embedding in a label that has a centroid, like any vector whose
+    length differs from its label's centroid (as long as the label's
+    longest vector), gets a NULL ``dist`` and a NULL z and never flags;
+    such a row still counts in its label's moment ``n`` while the
+    distance sums skip it, so it shifts the other vectors' z. Labels with
+    zero distance variance (singleton or duplicated clusters) report NULL
+    z and never flag. No reference counterpart
     (/root/reference/src/okay/validator.py).
 
     Output, one row per vector: ``(vec_id, label, dist, z, outlier)``

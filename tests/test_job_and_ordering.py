@@ -3,6 +3,10 @@ okay-compatible intra-document message ordering."""
 
 from __future__ import annotations
 
+import os
+import threading
+
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -243,9 +247,79 @@ def test_job_resume_and_crash_order(spark, tmp_path, monkeypatch):
         raise AssertionError("the injected fault did not fire")
     monkeypatch.setattr(state, "write_table", real_write)
     assert spark.read.parquet(f"{crash_out}/summaries").count() == 4
+    # the checks lane had finished before the battery lane's error propagated
+    assert spark.read.parquet(f"{crash_out}/metrics_stats").count() > 0
+    assert not os.path.exists(f"{crash_out}/run_metrics")
     fp = state.schema_fingerprint(compile_cached(document_schema))
     assert state.completed_partitions(spark, f"{crash_out}/lineage", "", fp) == set()
     again = run_full_validation(
         spark, docs, catalog, document_schema, output=crash_out, run_id="c2"
     )
     assert again["battery"]["partitions"] == 4
+
+
+# --- two lanes: battery on the caller's thread, aggregate checks beside it ------
+
+
+def test_job_lanes_stay_in_callers_job_group(spark, tmp_path):
+    """The checks lane runs on a helper thread; each Spark job it starts
+    must still carry the job group set by the caller, or per-group
+    accounting (benchmarks, cancellation) loses those stages."""
+    from okay_spark.fixtures import document_schema, interleaved_documents, media_catalog
+    from okay_spark.job import run_full_validation
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    docs = interleaved_documents(spark, 200, parts=4).cache()
+    reference = interleaved_documents(spark, 200, parts=4, inject_errors=False)
+    catalog = media_catalog(spark, 1_000)
+    docs.count()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    group = "okay-spark-lanes-test"
+    sc.setJobGroup(group, "two lanes")
+    try:
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        run_full_validation(
+            spark,
+            docs,
+            catalog,
+            document_schema,
+            output=str(tmp_path / "run"),
+            run_id="g1",
+            reference_snapshot=reference,
+        )
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        escaped = set(tracker.getJobIdsForGroup(None)) - ungrouped
+        grouped = tracker.getJobIdsForGroup(group)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert escaped == set()
+    assert len(grouped) >= 10  # both lanes' writes, drift's collects, run_metrics
+
+
+def test_job_checks_lane_fault(spark, tmp_path, monkeypatch):
+    """A failing check surfaces after the battery lane has finished: the
+    battery's sinks and lineage are complete, run_metrics is not written,
+    and no helper thread outlives the call."""
+    import okay_spark.job as job
+    from okay_spark.fixtures import document_schema, interleaved_documents, media_catalog
+
+    docs = interleaved_documents(spark, 200, parts=4).cache()
+    catalog = media_catalog(spark, 1_000)
+    out = str(tmp_path / "run")
+    real_write = job.write_table
+
+    def failing_write(df, target, **kw):
+        if target.endswith("/violations_uniqueness"):
+            raise RuntimeError("injected uniqueness fault")
+        return real_write(df, target, **kw)
+
+    monkeypatch.setattr(job, "write_table", failing_write)
+    threads = threading.active_count()
+    with pytest.raises(RuntimeError, match="injected uniqueness fault"):
+        job.run_full_validation(spark, docs, catalog, document_schema, output=out, run_id="f1")
+    assert threading.active_count() == threads
+    assert spark.read.parquet(f"{out}/violations").count() > 0
+    assert spark.read.parquet(f"{out}/summaries").count() == 4
+    assert spark.read.parquet(f"{out}/lineage").count() == 4
+    assert not os.path.exists(f"{out}/run_metrics")
