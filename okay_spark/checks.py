@@ -98,7 +98,7 @@ def schema_table_diff(df: DataFrame, schema) -> DataFrame:
     """
     from pyspark.sql.types import ArrayType, MapType, StringType, StructType
 
-    from .engine import _resolves
+    from .plan_exploded import _resolves
     from .paths import parse_path
 
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
@@ -828,7 +828,9 @@ def partition_summary(
 
     Computed in the SAME pass as the rule battery (the violations array is a
     projection; the only shuffle is the final tiny groupBy on the partition
-    key) — no second scan of the table."""
+    key) — no second scan of the table. No Python runs unless the schema has
+    ``custom`` (or Python-dialect regex) rules, which are Arrow-batched as in
+    :func:`okay_spark.engine.validate_dataframe`."""
     parts = [partition_cols] if isinstance(partition_cols, str) else list(partition_cols)
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
     n_viol = F.size(violations_array(df.schema, compiled))

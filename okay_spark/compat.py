@@ -38,7 +38,7 @@ from pyspark.sql.types import (
 from .errors import SchemaError
 from .messages import Message, expected_json
 from .paths import ELEM, ROOT, ROW_KEY, Name, Step, parse_path
-from .rules import _STRING_TYPES, VIOL_ARRAY_DDL
+from .rules import _STRING_TYPES, VIOL_ARRAY_DDL, is_arrow_routed
 from .schema import CompiledSchema, Rule
 
 
@@ -296,6 +296,13 @@ def _maybe_prune(custom_rules, rest, top_dt: DataType, inner: Column):
     return top_dt, inner, None
 
 
+def has_arrow_routed(compiled: CompiledSchema) -> bool:
+    """True when any rule needs the Arrow pass: custom rules, plus string
+    rules auto-routed there because their regex uses Python-only dialect
+    constructs (see :func:`okay_spark.rules.is_arrow_routed`)."""
+    return any(is_arrow_routed(r) for f in compiled.fields.values() for r in f.rules)
+
+
 def custom_violation_arrays(
     df_schema: StructType, compiled: CompiledSchema
 ) -> list[Column]:
@@ -311,8 +318,6 @@ def custom_violation_arrays(
     comparing against such fields see ``nan`` where the reference sees
     ``None`` (documented divergence; comparisons involving NaN are False
     either way)."""
-    from .rules import is_arrow_routed
-
     arrays: list[Column] = []
     for fidx, (path, spec) in enumerate(compiled.fields.items()):
         custom_rules = [

@@ -89,8 +89,3 @@ def child_key(child: str) -> str:
     okay uses ``child.strip('[]')`` (``/root/reference/src/okay/validator.py:88``).
     """
     return child.strip("[]")
-
-
-def join_instance(parent_path: str, child: str) -> str:
-    """Join a parent *instance* path with a child segment for messages."""
-    return child if parent_path == ROOT else f"{parent_path}.{child}"

@@ -1,25 +1,46 @@
-"""Whole-stage-codegen battery plan: explode arrays instead of HOF lambdas.
+"""The battery's one lowering: compiled schema × Spark schema -> violation checks.
 
-The single-expression plan in :mod:`okay_spark.engine` evaluates ``[]`` paths
-with higher-order functions (``transform``/``filter``). HOFs are
-CodegenFallback expressions — one of them anywhere in a projection drops the
-whole stage out of Tungsten codegen into interpreted evaluation (measured
-~3-5x slower on the interleaved battery). This module lowers the same
-compiled schema to an explode-based plan instead:
+The reference walks each document as a dict (okay's ``validator.py:7-11``:
+compile -> index -> rule scan -> missing/extra). Here the walk is resolved
+statically against the Spark schema and every check becomes a Column:
 
-    scan -> [per-level check arrays materialized as columns]
-         -> posexplode_outer(spans) [-> deeper chain arrays...]
-         -> explode(concat(level arrays)) -> filter(not null)
+- dotted paths    -> struct-field / map-key access with existence guards
+                     (Catalyst prunes nested schemas);
+- ``[]`` paths    -> either a generated row per element (the *primary
+                     chain*, below) or ``transform(arr, (x, i) -> ...)`` so
+                     instance paths carry the element index
+                     (``spans[3].kind``, ``index.py:45``);
+- missing fields  -> static schema diff + null-parent predicates
+                     (``validator.py:70-93``);
+- extra fields    -> static schema diff for structs, ``map_keys`` set-minus
+                     for open MapType segments (``validator.py:60-68``,
+                     ``index.py:24-25``).
 
-One *primary chain* of nested arrays (the one carrying the most schema
-fields — for the north-rule shape, ``spans[]``) rides the generate pipeline;
-document-level checks are guarded to fire exactly once per document (on the
-first generated row: ``posexplode_outer`` emits at least one row per input,
-so ``_i IS NULL OR _i = 0`` selects exactly one). Schema fields on other
-array families fall back to the HOF expression plan, attached at the root
-level — correctness never depends on the routing, only performance does.
+:func:`_lower` produces, per chain depth, one nullable violation column per
+flat check plus one ``array<violation>`` per higher-order-function walk. Two
+assemblies consume the same lowering:
 
-Two sizing rules keep memory flat at scale:
+- **explode** (:func:`exploded_violations`, behind ``validate_dataframe``):
+  one primary chain of nested arrays (the one carrying the most schema
+  fields — for the north-rule shape, ``spans[]``) rides the generate
+  pipeline, so element checks stay flat expressions instead of lambdas::
+
+      scan -> [per-level check arrays materialized as columns]
+           -> posexplode_outer(spans) [-> deeper chain arrays...]
+           -> explode(concat(level arrays)) -> filter(not null)
+
+  Document-level checks fire exactly once per document (on the first
+  generated row: ``posexplode_outer`` emits at least one row per input, so
+  ``_i IS NULL OR _i = 0`` selects exactly one). Fields on other array
+  families fall back to the HOF walk, attached at the root level —
+  correctness never depends on the routing, only performance does.
+- **row** (:func:`row_violations`, behind ``engine.violations_array``): the
+  same lowering with an empty chain, all checks concatenated into ONE
+  ``array<violation>`` per input row. Quarantine, the per-partition and
+  per-rule summaries and streaming need one value per row without a shuffle,
+  so they keep this form.
+
+Two sizing rules keep the explode assembly's memory flat at scale:
 
 - each level's checks are materialized as an array column BELOW the next
   generate, so wide source columns (the spans array itself) are never
@@ -29,36 +50,217 @@ Two sizing rules keep memory flat at scale:
 - per-level arrays are guarded as whole arrays, so non-first generated rows
   concatenate empty arrays instead of building N null slots.
 
-Violation semantics are identical to the HOF plan (the conformance suite
-runs against both strategies).
+okay's dynamic typing vs Spark's static columns (documented mapping,
+SURVEY.md §1.5): a null struct/array child counts as *present with None*
+(``null_value`` path), "key absent" arises only from columns statically
+absent from the Spark schema or from MapType-modelled open segments;
+heterogeneous-type errors resolve at compile time against the column type.
+
+Divergence from the reference (deliberate): okay *crashes* with a
+``RuntimeError: dictionary changed size during iteration`` when a required
+child sits under a null list element (defaultdict mutation in
+``validator.py:83``, verified by execution); we implement the intended
+semantics: ``null_value`` for the element's rules plus ``missing_field`` for
+its required children unless the element field is a nullable object.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 from operator import and_, or_
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
-from .paths import ELEM, ROOT, ROW_KEY, Name, child_key, parent_and_child, parse_path
+from .paths import ELEM, ROOT, ROW_KEY, Name, Step, child_key, parent_and_child, parse_path
 from .rules import (
     _STRING_TYPES,
     empty_violations,
     lower_checks,
+    lower_instance,
     make_violation,
 )
 from .schema import CompiledSchema, FieldSpec
 
-_SEQ_PHASE = 1_000_000_000
+# seq = phase * 1e9 + field_index * 1e3 + rule_index: reproduces okay's
+# deterministic message ordering (rule scan -> missing -> extra;
+# ``validator.py:8-11``) when violations are sorted by (seq, path).
+_PHASE = 1_000_000_000
 
 
 def _seq(phase: int, field_idx: int, rule_idx: int = 0) -> int:
-    return phase * _SEQ_PHASE + field_idx * 1_000 + rule_idx
+    return phase * _PHASE + field_idx * 1_000 + rule_idx
 
 
 def _q(name: str) -> Column:
     return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _join_fname(parent: str, key: str) -> str:
+    return key if parent == ROOT else f"{parent}.{key}"
+
+
+def _declared_keys(compiled: CompiledSchema, fname: str) -> list[str]:
+    """Keys the schema declares directly under the (non-root) map field
+    ``fname``; every other key of a map instance is an extra field."""
+    return sorted(
+        {
+            p[len(fname) + 1 :].split(".", 1)[0].split("[", 1)[0]
+            for p in compiled.fields
+            if p.startswith(fname + ".")
+        }
+    )
+
+
+# ---------------------------------------------------------------------------
+# HOF walk: every instance of a path, as one array<violation>
+# ---------------------------------------------------------------------------
+
+
+def _resolves(dtype: DataType, steps: list[Step]) -> bool:
+    """Static check: does this path have any instances under this Spark type?
+
+    Mirrors the reference's index pruning: paths through non-dict/non-list
+    values simply have no entries (``index.py:30-35``)."""
+    if not steps:
+        return True
+    step, rest = steps[0], steps[1:]
+    if step is ELEM:
+        return isinstance(dtype, ArrayType) and _resolves(dtype.elementType, rest)
+    assert isinstance(step, Name)
+    if isinstance(dtype, StructType):
+        return step.name in dtype.names and _resolves(dtype[step.name].dataType, rest)
+    if isinstance(dtype, MapType) and isinstance(dtype.keyType, _STRING_TYPES):
+        return _resolves(dtype.valueType, rest)
+    return False
+
+
+InstanceFn = Callable[[Column, DataType, Column], Column]
+
+
+def _descend(value: Column, dtype: DataType, path: Column, steps: list[Step], fn: InstanceFn) -> Column:
+    """Apply ``fn`` to every instance of ``steps`` under ``value``.
+
+    Existence guards reproduce the index walk: a null parent contributes no
+    child instances; a missing map key contributes none. Returns a non-null
+    ``array<violation>`` column."""
+    if not steps:
+        return fn(value, dtype, path)
+    step, rest = steps[0], steps[1:]
+    if step is ELEM:
+        assert isinstance(dtype, ArrayType)
+        elem_dt = dtype.elementType
+        inner = F.transform(
+            value,
+            lambda x, i: _descend(
+                x, elem_dt, F.concat(path, F.lit("["), i.cast("string"), F.lit("]")), rest, fn
+            ),
+        )
+        return F.coalesce(F.flatten(inner), empty_violations())
+    assert isinstance(step, Name)
+    child_path = F.concat(path, F.lit("."), F.lit(step.name))
+    if isinstance(dtype, StructType):
+        child_dt = dtype[step.name].dataType
+        inner = _descend(value[step.name], child_dt, child_path, rest, fn)
+        return F.when(value.isNotNull(), inner).otherwise(empty_violations())
+    assert isinstance(dtype, MapType)
+    child = F.try_element_at(value, F.lit(step.name))
+    exists = F.coalesce(F.map_contains_key(value, F.lit(step.name)), F.lit(False))
+    inner = _descend(child, dtype.valueType, child_path, rest, fn)
+    return F.when(exists, inner).otherwise(empty_violations())
+
+
+def _map_instances(df_schema: StructType, steps: list[Step], fn: InstanceFn) -> Column | None:
+    """``fn`` over every instance of a non-root path, or None when the path
+    has no instances under ``df_schema``."""
+    if not _resolves(df_schema, steps):
+        return None
+    step = steps[0]
+    assert isinstance(step, Name)
+    child_dt = df_schema[step.name].dataType
+    return _descend(_q(step.name), child_dt, F.lit(step.name), steps[1:], fn)
+
+
+def _extra_expr(
+    value: Column,
+    dtype: DataType,
+    fname: str,
+    path: Column,
+    compiled: CompiledSchema,
+    seq: int,
+) -> Column | None:
+    """array<violation> of extra-field reports under one non-root struct/map
+    instance. Caller guards with ``value.isNotNull()``. Only the topmost
+    extra path is reported — undeclared subtrees are not walked, matching the
+    reference's pruned index walk."""
+    parts: list[Column] = []
+    if isinstance(dtype, StructType):
+        for m in dtype.names:
+            child_fname = _join_fname(fname, m)
+            cpath = F.concat(path, F.lit("."), F.lit(m))
+            if child_fname not in compiled.fields:
+                parts.append(F.array(make_violation(cpath, "extra_field", None, seq)))
+                continue
+            sub = _extra_descend(value[m], dtype[m].dataType, child_fname, cpath, compiled, seq)
+            if sub is not None:
+                parts.append(sub)
+    elif isinstance(dtype, MapType) and isinstance(dtype.keyType, _STRING_TYPES):
+        declared = _declared_keys(compiled, fname)
+        keys = F.map_keys(value)
+        extra_keys = (
+            F.filter(keys, lambda k: ~k.isin(*declared)) if declared else keys
+        )
+        parts.append(
+            F.transform(
+                extra_keys,
+                lambda k: make_violation(F.concat(path, F.lit("."), k), "extra_field", None, seq),
+            )
+        )
+        for k in declared:
+            child_fname = _join_fname(fname, k)
+            if child_fname not in compiled.fields:
+                continue
+            child = F.try_element_at(value, F.lit(k))
+            cpath = F.concat(path, F.lit("."), F.lit(k))
+            sub = _extra_descend(child, dtype.valueType, child_fname, cpath, compiled, seq)
+            if sub is not None:
+                parts.append(sub)
+    if not parts:
+        return None
+    return F.concat(*parts) if len(parts) > 1 else parts[0]
+
+
+def _extra_descend(
+    child: Column, dtype: DataType, fname: str, cpath: Column, compiled: CompiledSchema, seq: int
+) -> Column | None:
+    """Walk a *declared* child looking for extras beneath it."""
+    if isinstance(dtype, (StructType, MapType)):
+        inner = _extra_expr(child, dtype, fname, cpath, compiled, seq)
+        if inner is None:
+            return None
+        return F.when(child.isNotNull(), inner).otherwise(empty_violations())
+    if isinstance(dtype, ArrayType):
+        elem_fname = fname + "[]"
+        if elem_fname not in compiled.fields:
+            return None  # list not declared -> elements never walked (index.py:39-40)
+        elem_dt = dtype.elementType
+
+        def per_elem(x, i):
+            epath = F.concat(cpath, F.lit("["), i.cast("string"), F.lit("]"))
+            sub = _extra_descend(x, elem_dt, elem_fname, epath, compiled, seq)
+            return empty_violations() if sub is None else sub
+
+        probe = _extra_descend(F.lit(None).cast(elem_dt), elem_dt, elem_fname, cpath, compiled, seq)
+        if probe is None:
+            return None
+        return F.coalesce(F.flatten(F.transform(child, per_elem)), empty_violations())
+    return None
+
+
+# ---------------------------------------------------------------------------
+# Flat contexts and the primary chain
+# ---------------------------------------------------------------------------
 
 
 def _decompose(steps) -> tuple[list[tuple[Name, ...]], list[Name]]:
@@ -174,18 +376,23 @@ def _pick_primary_chain(
         chain.append(max(counts.items(), key=lambda kv: kv[1])[0])
 
 
-def _join_fname(parent: str, key: str) -> str:
-    return key if parent == ROOT else f"{parent}.{key}"
+# ---------------------------------------------------------------------------
+# The lowering
+# ---------------------------------------------------------------------------
 
 
-def exploded_violations(df: DataFrame, compiled: CompiledSchema) -> DataFrame:
-    """The battery as an explode pipeline; returns a DataFrame with the
-    source id columns plus ``_v`` (non-null violation struct rows)."""
-    df_schema = df.schema
+def _lower(
+    df_schema: StructType, compiled: CompiledSchema, chain: list[tuple[Name, ...]]
+) -> tuple[list[_Ctx], list[tuple[int, Column]], list[tuple[int, Column]]]:
+    """Lower the whole battery against ``chain``, the nested arrays whose
+    elements get a generated row each (empty: one row per document).
+
+    Returns the chain's array contexts (what each depth explodes), the flat
+    checks as ``(depth, violation-or-NULL column)`` and the HOF walks as
+    ``(depth, array<violation> column)``. Element columns of depth ``d`` are
+    named ``__ok_i{d}``/``__ok_e{d}``."""
     fields = list(compiled.fields.items())
-    chain = _pick_primary_chain(fields, df_schema)
     chain_dtypes = _resolve_chain(df_schema, chain) if chain else []
-    max_depth = len(chain)
 
     # ---- per-level contexts (no DataFrame needed yet) -----------------------
     root_ctx = _Ctx(None, df_schema, F.lit(ROOT), None, at_root=True)
@@ -221,8 +428,6 @@ def exploded_violations(df: DataFrame, compiled: CompiledSchema) -> DataFrame:
     dyn_arrays: list[tuple[int, Column]] = []  # (level, array<viol> col)
 
     # ---- phase 1: rule scan -------------------------------------------------
-    from .engine import _map_instances  # HOF fallback for off-chain families
-
     for fidx, (path, spec) in enumerate(fields):
         if not spec.rules:
             continue
@@ -232,10 +437,8 @@ def exploded_violations(df: DataFrame, compiled: CompiledSchema) -> DataFrame:
         level = route(segs)
         if level is None or (segs and _resolve_chain(df_schema, segs) is None):
 
-            def fn(value, dtype, pcol, never_null, _rules=rules):
-                from .rules import lower_instance
-
-                return lower_instance(value, dtype, pcol, _rules, value_never_null=never_null)
+            def fn(value, dtype, pcol, _rules=rules):
+                return lower_instance(value, dtype, pcol, _rules)
 
             arr = _map_instances(df_schema, steps, fn)
             if arr is not None:
@@ -267,18 +470,8 @@ def exploded_violations(df: DataFrame, compiled: CompiledSchema) -> DataFrame:
         level = route(segs)
         if level is None or (segs and _resolve_chain(df_schema, segs) is None):
 
-            def fn(
-                pv,
-                pdt,
-                pp,
-                never_null,
-                _child=child,
-                _key=key,
-                _np=nullable_parent,
-                _seq=seq,
-                _root=(parent_name == ROOT),
-            ):
-                col = _missing_cond(pv, pdt, pp, never_null, _child, _key, _np, _seq, _root, None)
+            def fn(pv, pdt, pp, _child=child, _key=key, _np=nullable_parent, _seq=seq):
+                col = _missing_cond(pv, pdt, pp, False, _child, _key, _np, _seq, False, None)
                 if col is None:
                     return empty_violations()
                 return F.filter(F.array(col), lambda v: v.isNotNull())
@@ -336,8 +529,23 @@ def exploded_violations(df: DataFrame, compiled: CompiledSchema) -> DataFrame:
                 scalar_checks,
                 dyn_arrays,
             )
+    return arr_ctxs, scalar_checks, dyn_arrays
 
-    # ---- assemble ------------------------------------------------------------------
+
+# ---------------------------------------------------------------------------
+# The two assemblies
+# ---------------------------------------------------------------------------
+
+
+def exploded_violations(df: DataFrame, compiled: CompiledSchema) -> DataFrame:
+    """Explode assembly: the battery as a generate pipeline; returns a
+    DataFrame with the source columns plus ``_v`` (non-null violation struct
+    rows)."""
+    df_schema = df.schema
+    chain = _pick_primary_chain(list(compiled.fields.items()), df_schema)
+    arr_ctxs, scalar_checks, dyn_arrays = _lower(df_schema, compiled, chain)
+    max_depth = len(chain)
+
     # Materialize each level's checks as array columns BEFORE the next
     # generate, so wide source columns are never required above a Generate
     # and generated rows stay narrow (ids + small violation arrays).
@@ -382,6 +590,29 @@ def exploded_violations(df: DataFrame, compiled: CompiledSchema) -> DataFrame:
     return cur.select("*", F.explode(combined).alias("_v")).where(F.col("_v").isNotNull())
 
 
+def row_violations(df_schema: StructType, compiled: CompiledSchema) -> Column:
+    """Row assembly: the native battery (no ``custom`` or Arrow-routed rule
+    bodies) as ONE non-null ``array<violation>`` Column per input row.
+
+    Each flat check enters as ``array(c)`` or an empty array. One
+    ``filter(..., v -> v IS NOT NULL)`` over the concatenated checks gives
+    the same array, but made a per-partition summary over 1M F1 documents
+    about 40% slower (8.4 s against 6.0 s on local[4]), so there is none."""
+    _, scalar_checks, dyn_arrays = _lower(df_schema, compiled, [])
+    parts = [
+        F.when(c.isNull(), empty_violations()).otherwise(F.array(c)) for _, c in scalar_checks
+    ]
+    parts += [arr for _, arr in dyn_arrays]
+    if not parts:
+        return empty_violations()
+    return F.concat(*parts) if len(parts) > 1 else parts[0]
+
+
+# ---------------------------------------------------------------------------
+# Missing and extra fields at one flat frame
+# ---------------------------------------------------------------------------
+
+
 def _missing_cond(
     pv, pdt, pp, never_null, child, key, nullable_parent, seq, parent_is_root, exists
 ) -> Column | None:
@@ -419,9 +650,9 @@ def _extra_walk(
 ) -> None:
     """Flat extra-field enumeration at one frame level, deferring the primary
     chain's next array to its own level and falling back to the HOF walker
-    for off-chain subtrees. Appends (level, col) / (level, array) entries."""
-    from .engine import _extra_descend
-
+    for off-chain subtrees. Appends (level, col) / (level, array) entries.
+    ``value is None`` marks the document root (a struct; maps are never at
+    the root)."""
     seq = _seq(2, 0)
     at_root = value is None
     if isinstance(dtype, StructType):
@@ -469,24 +700,13 @@ def _extra_walk(
                     )
                     dyn_arrays.append((level, arr))
     elif isinstance(dtype, MapType) and isinstance(dtype.keyType, _STRING_TYPES):
-        declared = sorted(
-            {
-                p[len(fname) + 1 if fname != ROOT else 0 :].split(".", 1)[0].split("[", 1)[0]
-                for p in compiled.fields
-                if p != ROOT and (fname == ROOT or p.startswith(fname + "."))
-            }
-        )
+        declared = _declared_keys(compiled, fname)
         keys = F.map_keys(value)
         extra_keys = F.filter(keys, lambda k: ~k.isin(*declared)) if declared else keys
         arr = F.coalesce(
             F.transform(
                 extra_keys,
-                lambda k: make_violation(
-                    F.concat(path, F.lit("."), k) if fname != ROOT else k,
-                    "extra_field",
-                    None,
-                    seq,
-                ),
+                lambda k: make_violation(F.concat(path, F.lit("."), k), "extra_field", None, seq),
             ),
             empty_violations(),
         )
@@ -498,7 +718,7 @@ def _extra_walk(
             if child_fname not in compiled.fields:
                 continue
             child = F.try_element_at(value, F.lit(k))
-            cpath = F.concat(path, F.lit("."), F.lit(k)) if fname != ROOT else F.lit(k)
+            cpath = F.concat(path, F.lit("."), F.lit(k))
             cdt = dtype.valueType
             present = _and_opt(exists, value.isNotNull())
             if isinstance(cdt, (StructType, MapType)):

@@ -41,7 +41,7 @@ rule auto-routes to the Arrow pass, which runs Python ``re`` exactly
 
 from __future__ import annotations
 
-from typing import Any, Union
+from typing import Union
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -570,35 +570,12 @@ def lower_checks(
 
 
 def lower_instance(
-    value: Column,
-    dtype: DataType,
-    path: Column,
-    rules: list[tuple[int, Rule]],
-    *,
-    value_never_null: bool = False,
+    value: Column, dtype: DataType, path: Column, rules: list[tuple[int, Rule]]
 ) -> Column:
     """All rule checks for one instance -> ``array<violation>`` (possibly
-    empty). The array form feeds the HOF (single-expression) plan used by
-    per-row summaries and streaming."""
-    checks = lower_checks(value, dtype, path, rules, value_never_null=value_never_null)
+    empty): the form a higher-order-function walk over array elements needs
+    (see :func:`okay_spark.plan_exploded._map_instances`)."""
+    checks = lower_checks(value, dtype, path, rules)
     if not checks:
         return empty_violations()
     return F.filter(F.array(*checks), lambda v: v.isNotNull())
-
-
-def rule_expected_payload(rule: Rule) -> dict[str, Any] | None:
-    """The expected dict a rule reports on failure (for docs/tests)."""
-    if rule.type in ("int", "number"):
-        return {k: rule.params.get(k) for k in ("min", "max", "options")}
-    if rule.type == "list":
-        return {k: rule.params.get(k) for k in ("min", "max")}
-    if rule.type == "string":
-        opts = rule.params.get("options")
-        return {
-            "case_sensitive": rule.params.get("case_sensitive", True) if opts is not None else None,
-            "max": rule.params.get("max"),
-            "min": rule.params.get("min"),
-            "options": opts,
-            "regex": rule.params.get("regex"),
-        }
-    return None

@@ -46,19 +46,6 @@ def brute_force_topk(
     return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
 
 
-def threshold_neighbors(
-    df: DataFrame,
-    query: list[float],
-    *,
-    threshold: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """All vectors with cosine >= threshold against one query (exact scan)."""
-    scored = df.select(F.col(id_col), cosine_to_query(vec_col, query).alias("score"))
-    return scored.filter(F.col("score") >= threshold)
-
-
 def lsh_knn_join(
     queries: DataFrame,
     corpus: DataFrame,

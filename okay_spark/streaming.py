@@ -3,24 +3,25 @@
 The reference is strictly batch-of-one (its design log explicitly deferred
 parallel/streaming execution, ``/root/reference/docs/development-log.md:410-418``)
 and the north rule is batch-over-Iceberg, so streaming here is an engine
-extension, not a conformance surface: the SAME compiled battery expression
-(:func:`okay_spark.engine.violations_array`) is applied to a streaming
-DataFrame — the battery is a stateless projection, so it is trivially
-streamable with exactly-once file sinks and checkpointing.
+extension, not a conformance surface: the battery's one lowering
+(:mod:`okay_spark.plan_exploded`) is applied to a streaming DataFrame — it is
+a stateless projection/generate, so it is trivially streamable with
+exactly-once file sinks and checkpointing.
 
-``validate_stream`` wires: readStream (file source) -> battery ->
-violations sink; ``run_incremental`` uses ``Trigger.AvailableNow`` so a cron
-re-run processes only files that arrived since the last checkpoint — the
-streaming analogue of the lineage-based batch resume in
-:mod:`okay_spark.state`. Windowed violation-rate monitoring with a watermark
-covers the late-data case.
+``validate_stream`` wires: readStream (file source) ->
+:func:`okay_spark.engine.validate_dataframe` -> violations sink;
+``run_incremental`` uses ``Trigger.AvailableNow`` so a cron re-run processes
+only files that arrived since the last checkpoint — the streaming analogue of
+the lineage-based batch resume in :mod:`okay_spark.state`.
+``running_violation_totals`` keeps per-key state over the per-row
+:func:`okay_spark.engine.violations_array`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine import validate_dataframe
+from .engine import validate_dataframe, violations_array
 from .schema import CompiledSchema, compile_cached
 
 
@@ -52,32 +53,6 @@ def run_incremental(
         .trigger(availableNow=True)
         .start()
         .awaitTermination()
-    )
-
-
-def violation_rate_by_window(
-    stream_df: DataFrame,
-    schema,
-    *,
-    ts_col: str,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Windowed violation counts with a watermark for late data — the
-    streaming analogue of partition_summary."""
-    from .engine import violations_array
-
-    compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
-    n_viol = F.size(violations_array(stream_df.schema, compiled))
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .select(F.col(ts_col), n_viol.alias("_nv"))
-        .groupBy(F.window(ts_col, window))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("_nv").alias("n_violations"),
-            F.count_if(F.col("_nv") > 0).alias("n_failed_docs"),
-        )
     )
 
 
@@ -165,8 +140,6 @@ def running_violation_totals(
     """
     import pandas as pd  # noqa: F401 (used in the worker closure)
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .engine import violations_array
 
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
     n_viol = F.size(violations_array(stream_df.schema, compiled))

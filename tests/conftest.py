@@ -39,3 +39,25 @@ def okay_reference():
     import okay  # noqa: F401
 
     return okay
+
+
+def _violations_by_row(df, schema, *, id_cols=None, include_seq=False):
+    """``validate_dataframe``'s rows rebuilt by exploding the per-row
+    ``engine.violations_array`` (the form quarantine, the summaries and
+    streaming consume), so a test can run each case through both forms."""
+    from pyspark.sql import functions as F
+
+    from okay_spark.engine import violations_array
+    from okay_spark.schema import CompiledSchema, compile_cached
+
+    compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
+    ids = list(id_cols) if id_cols is not None else [c for c in df.columns if c == "doc_id"]
+    fields = ["path", "rule", "expected"] + (["seq"] if include_seq else [])
+    return df.select(*ids, F.explode(violations_array(df.schema, compiled)).alias("_v")).select(
+        *ids, *[F.col("_v")[f].alias(f) for f in fields]
+    )
+
+
+@pytest.fixture(scope="session")
+def violations_by_row():
+    return _violations_by_row

@@ -14,6 +14,8 @@ those engine behaviors get dedicated divergence tests at the bottom.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 
 from okay_spark import compile_schema
@@ -452,7 +454,7 @@ def _freeze(expected):
     return tuple(sorted((k, tuple(v) if isinstance(v, list) else v) for k, v in expected.items()))
 
 
-def _engine(spark, decls, ddl, rows, strategy="explode"):
+def _case_frame(spark, decls, ddl, rows):
     from okay_spark import schema as dsl
 
     ddl_with_id = f"{ID} int, {ddl}"
@@ -461,17 +463,23 @@ def _engine(spark, decls, ddl, rows, strategy="explode"):
     compiled = compile_schema(
         _decls_to_fn(decls, dsl.required, dsl.optional, dsl.ignore_extra_fields)
     )
-    out = validate_dataframe(df, compiled, id_cols=[ID], strategy=strategy).collect()
+    return df, compiled
+
+
+def _engine(spark, decls, ddl, rows, validate=validate_dataframe):
+    df, compiled = _case_frame(spark, decls, ddl, rows)
+    out = validate(df, compiled, id_cols=[ID]).collect()
     result = {i: set() for i in range(len(rows))}
     for r in out:
         result[r[ID]].add((r["rule"], r["path"], _freeze(parse_expected(r["expected"]))))
     return df, result
 
 
-@pytest.mark.parametrize("strategy", ["explode", "array"])
+@pytest.mark.parametrize("form", ["explode", "row"])
 @pytest.mark.parametrize("decls,ddl,rows", CASES)
-def test_conformance(spark, okay_reference, decls, ddl, rows, strategy):
-    df, engine_result = _engine(spark, decls, ddl, rows, strategy)
+def test_conformance(spark, okay_reference, violations_by_row, decls, ddl, rows, form):
+    validate = validate_dataframe if form == "explode" else violations_by_row
+    df, engine_result = _engine(spark, decls, ddl, rows, validate)
     docs = [row.asDict(recursive=True) for row in df.collect()]
     oracle_result = _oracle(decls, docs, okay_reference)
     for i in sorted(oracle_result):
@@ -580,3 +588,62 @@ def test_custom_rules(spark, okay_reference):
                 )
             )
     assert got == expect
+
+
+# ---------------------------------------------------------------------------
+# Both assemblies of the one lowering agree (needs no reference checkout):
+# explode(violations_array) == validate_dataframe as (id, path, rule,
+# expected, seq) multisets
+# ---------------------------------------------------------------------------
+
+
+def _assert_forms_agree(df, compiled, id_col, violations_by_row):
+    def multiset(out):
+        return Counter(
+            (r[id_col], r["path"], r["rule"], r["expected"], r["seq"]) for r in out.collect()
+        )
+
+    want = multiset(validate_dataframe(df, compiled, id_cols=[id_col], include_seq=True))
+    got = multiset(violations_by_row(df, compiled, id_cols=[id_col], include_seq=True))
+    assert got == want, f"row-only={got - want} explode-only={want - got}"
+    return got
+
+
+@pytest.mark.parametrize("decls,ddl,rows", CASES)
+def test_row_form_matches_explode_form(spark, violations_by_row, decls, ddl, rows):
+    df, compiled = _case_frame(spark, decls, ddl, rows)
+    _assert_forms_agree(df, compiled, ID, violations_by_row)
+
+
+def test_row_form_matches_explode_form_f1(spark, violations_by_row):
+    from okay_spark.fixtures import document_schema, interleaved_documents
+
+    docs = interleaved_documents(spark, 3_000, parts=4)
+    got = _assert_forms_agree(docs, compile_schema(document_schema), "doc_id", violations_by_row)
+    assert sum(got.values()) > 0
+
+
+def test_row_form_matches_explode_form_custom(spark, violations_by_row):
+    """Custom rules and Python-dialect regex rules (both Arrow-batched) reach
+    the per-row form too."""
+    from okay_spark import schema as dsl
+    from okay_spark.fixtures import document_schema, interleaved_documents
+    from okay_spark.messages import Message
+
+    def offsets_monotonic(field, value, **kw):
+        offs = [s["offset"] for s in value or [] if s is not None and s["offset"] is not None]
+        if any(b < a for a, b in zip(offs, offs[1:])):
+            return Message(type="out_of_order_spans", field=field)
+        return None
+
+    def schema_fn():
+        document_schema()
+        dsl.required("spans", type="custom", validator=offsets_monotonic)
+        # (?P<...>) is Python-only regex dialect: routed to the Arrow pass;
+        # odd catalog ids fail it
+        dsl.optional("spans[].media_ref", type="string?", regex=r"(?P<m>media)-\d{7}[02468]")
+
+    docs = interleaved_documents(spark, 3_000, parts=4)
+    got = _assert_forms_agree(docs, compile_schema(schema_fn), "doc_id", violations_by_row)
+    rules = {rule for (_, _, rule, _, _) in got}
+    assert {"out_of_order_spans", "no_match"} <= rules, rules

@@ -186,9 +186,9 @@ def _freeze(expected):
     )
 
 
-@pytest.mark.parametrize("strategy", ["explode", "array"])
+@pytest.mark.parametrize("form", ["explode", "row"])
 @pytest.mark.parametrize("seed", [1, 2, 3])
-def test_engine_fuzz_matches_reference(spark, okay_reference, seed, strategy):
+def test_engine_fuzz_matches_reference(spark, okay_reference, violations_by_row, seed, form):
     from okay import validate  # type: ignore
     from okay.schema import optional as r_optional, required as r_required  # type: ignore
     from okay_spark import schema as dsl
@@ -199,7 +199,8 @@ def test_engine_fuzz_matches_reference(spark, okay_reference, seed, strategy):
 
     df = spark.createDataFrame(rows, schema=f"{ID} int, {DDL}")
     compiled = compile_schema(_schema_fn(decls, dsl.required, dsl.optional))
-    engine_rows = validate_dataframe(df, compiled, id_cols=[ID], strategy=strategy).collect()
+    validate = validate_dataframe if form == "explode" else violations_by_row
+    engine_rows = validate(df, compiled, id_cols=[ID]).collect()
     engine = {i: set() for i in range(len(rows))}
     for r in engine_rows:
         engine[r[ID]].add((r["rule"], r["path"], _freeze(parse_expected(r["expected"]))))
@@ -211,6 +212,6 @@ def test_engine_fuzz_matches_reference(spark, okay_reference, seed, strategy):
         want = {(m.type, m.field, _freeze(getattr(m, "expected", None))) for m in msgs}
         got = engine[doc[ID]]
         assert got == want, (
-            f"seed={seed} strategy={strategy} doc={doc!r}\n"
+            f"seed={seed} form={form} doc={doc!r}\n"
             f"engine-only={got - want}\noracle-only={want - got}\ndecls={decls}"
         )

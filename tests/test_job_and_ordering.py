@@ -45,7 +45,7 @@ def test_full_validation_job(spark, tmp_path):
     assert again["battery"]["partitions"] == 0 and again["battery"]["skipped"] == 4
 
 
-def test_message_ordering_matches_okay(spark, okay_reference):
+def test_message_ordering_matches_okay(spark, okay_reference, violations_by_row):
     """okay's deterministic per-document order: rule violations (document /
     rule order) -> missing fields (schema order) -> extra fields. The engine
     reproduces it via the violation ``seq`` (phase, field, rule) when sorted;
@@ -78,18 +78,16 @@ def test_message_ordering_matches_okay(spark, okay_reference):
         [(0, 5, "x", [("bad",), ("ok",), ("worse",)], "zz")],
         "_id int, a bigint, b string, xs array<struct<k:string>>, extra_col string",
     )
-    for strategy in ("array", "explode"):
+    for form in (validate_dataframe, violations_by_row):
         got = [
             (r["rule"], r["path"])
-            for r in validate_dataframe(
-                df, compile_schema(ours), id_cols=["_id"], include_seq=True, strategy=strategy
-            )
+            for r in form(df, compile_schema(ours), id_cols=["_id"], include_seq=True)
             .orderBy("seq", "path")
             .collect()
         ]
         doc = df.first().asDict(recursive=True)
         expect = [(m.type, m.field) for m in validate(ref, doc)]
-        assert got == expect, f"{strategy}: {got} != {expect}"
+        assert got == expect, f"{form.__name__}: {got} != {expect}"
 
 
 # --- one battery pass per job ---------------------------------------------------
@@ -120,10 +118,24 @@ def _summary_input(spark):
     ).unionByName(twins)
 
 
+def _assert_job_summaries_match(spark, out, run_id, docs, schema):
+    from okay_spark.checks import partition_summary, rule_summary
+
+    for sink, expected in [
+        ("summaries", partition_summary(docs, schema, "part")),
+        ("summaries_by_rule", rule_summary(docs, schema, "part")),
+    ]:
+        expected = expected.withColumn("run_id", F.lit(run_id))
+        got = spark.read.parquet(f"{out}/{sink}")
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in expected.schema
+        ], sink
+        assert _sorted_rows(got) == _sorted_rows(expected), sink
+
+
 def test_job_summaries_equal_public_functions(spark, tmp_path):
     """The job's summaries come from its one battery pass, not from
     partition_summary/rule_summary; they must be the same rows and types."""
-    from okay_spark.checks import partition_summary, rule_summary
     from okay_spark.fixtures import document_schema, media_catalog
     from okay_spark.job import run_full_validation
 
@@ -132,17 +144,7 @@ def test_job_summaries_equal_public_functions(spark, tmp_path):
     run_full_validation(
         spark, docs, media_catalog(spark, 1_000), document_schema, output=out, run_id="s1"
     )
-
-    for sink, expected in [
-        ("summaries", partition_summary(docs, document_schema, "part")),
-        ("summaries_by_rule", rule_summary(docs, document_schema, "part")),
-    ]:
-        expected = expected.withColumn("run_id", F.lit("s1"))
-        got = spark.read.parquet(f"{out}/{sink}")
-        assert [(f.name, f.dataType) for f in got.schema] == [
-            (f.name, f.dataType) for f in expected.schema
-        ], sink
-        assert _sorted_rows(got) == _sorted_rows(expected), sink
+    _assert_job_summaries_match(spark, out, "s1", docs, document_schema)
 
     by_part = {r["part"]: r for r in spark.read.parquet(f"{out}/summaries").collect()}
     assert set(by_part) == {0, 1, 2, 7, None}
@@ -152,9 +154,49 @@ def test_job_summaries_equal_public_functions(spark, tmp_path):
     assert by_part[0]["n_failed_docs"] > viol0.select("doc_id").distinct().count()
 
 
-def test_row_key_is_invisible_to_validation(spark):
+def test_custom_rule_reaches_per_row_consumers(spark, tmp_path):
+    """A custom rule's violations reach the per-row consumers: the job's
+    summaries still equal partition_summary/rule_summary, and quarantine
+    flags exactly what validate_dataframe reports."""
+    from okay_spark import required
+    from okay_spark.engine import quarantine, validate_dataframe
+    from okay_spark.fixtures import document_schema, media_catalog
+    from okay_spark.job import run_full_validation
+    from okay_spark.messages import Message
+
+    def offsets_monotonic(field, value, **kw):
+        offs = [s["offset"] for s in value or [] if s is not None and s["offset"] is not None]
+        if any(b < a for a, b in zip(offs, offs[1:])):
+            return Message(type="out_of_order_spans", field=field)
+        return None
+
+    def schema():
+        document_schema()
+        required("spans", type="custom", validator=offsets_monotonic)
+
+    docs = _summary_input(spark).cache()
+    out = str(tmp_path / "run")
+    run_full_validation(spark, docs, media_catalog(spark, 1_000), schema, output=out, run_id="c1")
+    _assert_job_summaries_match(spark, out, "c1", docs, schema)
+    by_rule = spark.read.parquet(f"{out}/summaries_by_rule")
+    assert by_rule.filter(F.col("rule") == "out_of_order_spans").count() > 0
+
+    per_doc: dict = {}
+    for r in validate_dataframe(docs, schema).collect():
+        n, reasons = per_doc.get(r["doc_id"], (0, set()))
+        per_doc[r["doc_id"]] = (n + 1, reasons | {f"{r['path']}:{r['rule']}"})
+    clean, quarantined = quarantine(docs, schema)
+    got: dict = {}
+    for r in quarantined.collect():
+        n, reasons = got.get(r["doc_id"], (0, set()))
+        got[r["doc_id"]] = (n + r["n_violations"], reasons | set(r["reasons"].split(";")))
+    assert got == per_doc
+    assert clean.count() + quarantined.count() == docs.count()
+
+
+def test_row_key_is_invisible_to_validation(spark, violations_by_row):
     """The resumable run's reserved row key is never reported as an extra
-    field, on either battery strategy, nor shown to a root custom rule;
+    field, in either battery form, nor shown to a root custom rule;
     other undeclared columns are still extra fields."""
     from okay_spark import ignore_extra_fields, required
     from okay_spark.engine import validate_dataframe
@@ -181,10 +223,10 @@ def test_row_key_is_invisible_to_validation(spark):
     df = interleaved_documents(spark, 200, parts=2)
     keyed = df.withColumn(ROW_KEY, F.monotonically_increasing_id())
     for schema in (strict, lenient, root_custom):
-        for strategy in ("explode", "array"):
-            plain = _sorted_rows(validate_dataframe(df, schema, strategy=strategy))
-            got = _sorted_rows(validate_dataframe(keyed, schema, strategy=strategy))
-            assert got == plain, (schema.__name__, strategy)
+        for form in (validate_dataframe, violations_by_row):
+            plain = _sorted_rows(form(df, schema))
+            got = _sorted_rows(form(keyed, schema))
+            assert got == plain, (schema.__name__, form.__name__)
             extra = {r[1] for r in got if r[2] == "extra_field"}
             assert not any(r[2] == "saw_row_key" for r in got)
             if schema is not strict:
