@@ -18,8 +18,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import BooleanType, DecimalType, NumericType
 
 from .engine import violations_array
-from .messages import expected_json
-from .salt import hash_salt, partition_salt, replicate_with_salts
+from .salt import partition_salt, replicate_with_salts
 from .schema import CompiledSchema, compile_cached
 
 # ---------------------------------------------------------------------------

@@ -372,7 +372,9 @@ def custom_violation_arrays(
                     results.append(viols)
                 return pd.Series(results, dtype=object)
 
-            return run
+            # nondeterministic: the optimizer must not copy the UDF into a
+            # pushed-down filter (it would run twice per row)
+            return run.asNondeterministic()
 
         arrays.append(F.coalesce(make_udf()(wrapped), F.array().cast(VIOL_ARRAY_DDL)))
     return arrays

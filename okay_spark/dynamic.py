@@ -16,8 +16,11 @@ null/rule scan in traversal order (``validator.py:40-58``), missing fields
 priority ladders, Decimal-coerced number comparisons
 (``number_validator.py:20``), bool-passes-int/number, regex fullmatch.
 Deliberate divergences (same as the engine): no crash on inf/nan under int
-rules (classified ``invalid_type``) and no defaultdict-mutation crash on
-null list elements.
+rules (classified ``invalid_type``), no crash on NaN against ``number``
+bounds or options (Spark's ordering: NaN sorts above every number and
+equals itself), and no defaultdict-mutation crash on null list elements.
+±inf under ``number`` rules is no divergence: ``Decimal`` orders it
+against any bound, as Spark does.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ from __future__ import annotations
 import json
 import math
 import re
-from decimal import Decimal, InvalidOperation
+from decimal import Decimal
 from typing import Any, Iterator
 
 import pandas as pd
@@ -80,28 +83,33 @@ def _check_string(rule: Rule, path: str, value: Any) -> Violation | None:
 
 
 def _check_number(rule: Rule, path: str, value: Any, type_name: str) -> Violation | None:
-    if isinstance(value, float) and (math.isnan(value) or math.isinf(value)):
-        # reference crashes on these under int rules and raises
-        # InvalidOperation in Decimal comparisons; documented divergence
-        return ("invalid_type", path, expected_json({"type": type_name}))
     if type_name == "int":
-        if not (isinstance(value, (int, float)) and value == int(value)):
+        # the reference crashes on NaN/±inf under int rules; documented
+        # divergence: they are not whole numbers, so invalid_type
+        whole = isinstance(value, int) or (
+            isinstance(value, float) and math.isfinite(value) and value.is_integer()
+        )
+        if not whole:
             return ("invalid_type", path, expected_json({"type": "int"}))
-    else:
-        if not isinstance(value, (int, float, Decimal)):
-            return ("invalid_type", path, expected_json({"type": "number"}))
+    elif not isinstance(value, (int, float, Decimal)):
+        return ("invalid_type", path, expected_json({"type": "number"}))
     p = rule.params
     lo, hi, options = p.get("min"), p.get("max"), p.get("options")
     if lo is None and hi is None and options is None:
         return None
-    try:
-        v = Decimal(value)  # okay's coercion (number_validator.py:20)
-    except InvalidOperation:  # pragma: no cover
-        return ("invalid_type", path, expected_json({"type": type_name}))
     expected = expected_json({"min": lo, "max": hi, "options": options})
-    pass_min = v >= Decimal(lo) if lo is not None else hi is not None
-    pass_max = v <= Decimal(hi) if hi is not None else lo is not None
-    pass_opt = v in [Decimal(o) for o in options] if options is not None else False
+    if isinstance(value, float) and math.isnan(value):
+        # the reference's Decimal comparison raises InvalidOperation on NaN;
+        # documented divergence: Spark's ordering, NaN above every number
+        # and equal to itself
+        pass_min = lo is not None or hi is not None
+        pass_max = hi is None and lo is not None
+        pass_opt = any(isinstance(o, float) and math.isnan(o) for o in options or ())
+    else:
+        v = Decimal(value)  # okay's coercion (number_validator.py:20); exact for ±inf
+        pass_min = v >= Decimal(lo) if lo is not None else hi is not None
+        pass_max = v <= Decimal(hi) if hi is not None else lo is not None
+        pass_opt = v in [Decimal(o) for o in options] if options is not None else False
     if pass_opt or (pass_min and pass_max):
         return None
     if lo is not None and not pass_min:

@@ -136,16 +136,23 @@ def quarantine(
     id_cols = list(id_cols)
     va = violations_array(df.schema, compiled)
     clean = df.filter(F.size(va) == 0)
-    quarantined = df.select(
-        *[F.col(c) for c in id_cols],
-        F.size(va).cast("bigint").alias("n_violations"),
-        F.array_join(
-            F.array_sort(
-                F.array_distinct(
-                    F.transform(va, lambda v: F.concat(v["path"], F.lit(":"), v["rule"]))
-                )
-            ),
-            ";",
-        ).alias("reasons"),
-    ).filter(F.col("n_violations") > 0)
+    # project the array once, then filter on it: filtering on an expression
+    # of ``va`` would let the optimizer evaluate the battery twice per row
+    _va = F.col("_va")
+    quarantined = (
+        df.select(*[F.col(c) for c in id_cols], va.alias("_va"))
+        .filter(F.size(_va) > 0)
+        .select(
+            *[F.col(c) for c in id_cols],
+            F.size(_va).cast("bigint").alias("n_violations"),
+            F.array_join(
+                F.array_sort(
+                    F.array_distinct(
+                        F.transform(_va, lambda v: F.concat(v["path"], F.lit(":"), v["rule"]))
+                    )
+                ),
+                ";",
+            ).alias("reasons"),
+        )
+    )
     return clean, quarantined

@@ -30,12 +30,15 @@ under an ``int`` rule) lowers to a value-level predicate.
 
 Documented divergences (SURVEY.md §2.3): NaN/±inf under an ``int`` rule yield
 ``invalid_type`` instead of the reference's uncaught OverflowError/ValueError;
-``number`` comparisons run in the column's native numeric type rather than
-``decimal.Decimal``. Regex patterns evaluate in Java's dialect (``rlike``)
-ONLY when the pattern is in the shared subset (classes, quantifiers,
-alternation, anchors — identical semantics); patterns using Python-only
-constructs are detected at compile time (``schema._PY_ONLY_REGEX``) and the
-rule auto-routes to the Arrow pass, which runs Python ``re`` exactly
+NaN against ``number`` bounds or options follows Spark's ordering (above every
+number, equal to itself) where the reference's ``Decimal`` comparison raises
+InvalidOperation; ``number`` comparisons run in the column's native numeric
+type rather than ``decimal.Decimal``. Regex patterns evaluate in Java's
+dialect (``rlike``) ONLY when the pattern is in the shared subset (classes,
+quantifiers, alternation, anchors — identical semantics); patterns using
+Python-only constructs are detected at compile time
+(``schema._PY_ONLY_REGEX``) and the rule auto-routes to the Arrow pass,
+which runs Python ``re`` exactly
 (:func:`is_arrow_routed`; enforced by tests/test_regex_dialect.py).
 """
 
@@ -567,15 +570,3 @@ def lower_checks(
             check = F.when(exists, check)
         checks.append(check)
     return checks
-
-
-def lower_instance(
-    value: Column, dtype: DataType, path: Column, rules: list[tuple[int, Rule]]
-) -> Column:
-    """All rule checks for one instance -> ``array<violation>`` (possibly
-    empty): the form a higher-order-function walk over array elements needs
-    (see :func:`okay_spark.plan_exploded._map_instances`)."""
-    checks = lower_checks(value, dtype, path, rules)
-    if not checks:
-        return empty_violations()
-    return F.filter(F.array(*checks), lambda v: v.isNotNull())

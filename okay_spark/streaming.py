@@ -13,8 +13,8 @@ exactly-once file sinks and checkpointing.
 ``run_incremental`` uses ``Trigger.AvailableNow`` so a cron re-run processes
 only files that arrived since the last checkpoint — the streaming analogue of
 the lineage-based batch resume in :mod:`okay_spark.state`.
-``running_violation_totals`` keeps per-key state over the per-row
-:func:`okay_spark.engine.violations_array`.
+``running_violation_totals`` keeps per-key running totals over the per-row
+:func:`okay_spark.engine.violations_array` in a streaming aggregate.
 """
 
 from __future__ import annotations
@@ -129,49 +129,27 @@ def running_violation_totals(
     *,
     key_col: str,
 ) -> DataFrame:
-    """Custom stateful operator: cumulative per-key document/violation totals
-    maintained across micro-batches with ``applyInPandasWithState``.
+    """Cumulative per-key document/violation totals across micro-batches:
+    ``(key, n_docs, n_violations, n_failed_docs)``, one JVM streaming
+    aggregate over the per-row battery. Run it in ``update`` output mode to
+    get each trigger's changed keys.
 
-    State per key is three counters — O(keys) state, not O(rows); batches
-    arrive Arrow-vectorized and are reduced with pandas ops (no per-row
-    Python). This is the pattern slot for stateful checks the built-in
-    windowed aggregates can't express (session-scoped rules, cross-batch
-    sequence invariants over the span stream).
+    State per key is three counters (O(keys), not O(rows)), kept by Spark's
+    state store; no Python runs unless the schema has Arrow-routed rules.
+    Checkpoints written by the earlier ``applyInPandasWithState`` form of
+    this operator hold a different state layout and cannot be resumed.
     """
-    import pandas as pd  # noqa: F401 (used in the worker closure)
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
     n_viol = F.size(violations_array(stream_df.schema, compiled))
-    base = stream_df.select(F.col(key_col).alias("_key"), n_viol.alias("_nv"))
-    key_type = stream_df.schema[key_col].dataType.simpleString()
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        docs, viols, failed = state.get if state.exists else (0, 0, 0)
-        for pdf in pdfs:
-            docs += len(pdf)
-            viols += int(pdf["_nv"].sum())
-            failed += int((pdf["_nv"] > 0).sum())
-        state.update((docs, viols, failed))
-        yield pd.DataFrame(
-            [
-                {
-                    "key": key[0],
-                    "n_docs": docs,
-                    "n_violations": viols,
-                    "n_failed_docs": failed,
-                }
-            ]
+    nv = F.col("_nv")
+    return (
+        stream_df.select(F.col(key_col).alias("key"), n_viol.alias("_nv"))
+        .groupBy("key")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(nv).cast("bigint").alias("n_violations"),
+            F.count_if(nv > 0).alias("n_failed_docs"),
         )
-
-    return base.groupBy("_key").applyInPandasWithState(
-        fn,
-        outputStructType=f"key {key_type}, n_docs bigint, n_violations bigint, n_failed_docs bigint",
-        stateStructType="n_docs bigint, n_violations bigint, n_failed_docs bigint",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

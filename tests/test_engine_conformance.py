@@ -253,8 +253,8 @@ CASES = [
         # regression: a declared list whose struct elements have only
         # UNDECLARED members must report per-element extra_field even when
         # another array family is the exploded plan's primary chain
-        # (plan_exploded passed the element fname to _extra_descend, probing
-        # "spans[][]" and silently dropping the extras)
+        # (the element walk once probed "spans[][]" and silently dropped
+        # the extras)
         "off_chain_list_element_extras",
         [
             ("required", "spans", "list", {"min": 1}),
@@ -416,6 +416,58 @@ CASES = [
     ),
 ]
 
+# Extra fields under the elements of off-chain arrays: ``spans`` carries the
+# most fields, so the explode form walks ``spans[]`` as generated rows and
+# every other array family inside a transform. Checked by both battery forms
+# against the per-document interpreter (test_row_form_matches_explode_form).
+OFF_CHAIN_EXTRA_CASES = [
+    case(
+        "off_chain_map_element_extras",
+        [
+            ("required", "spans[].a", "string", {}),
+            ("required", "spans[].b", "string", {}),
+            ("required", "tags[].k", "string", {}),
+        ],
+        "spans array<struct<a:string, b:string>>, tags array<map<string,string>>",
+        [
+            ([("x", "y")], [{"k": "1", "stray": "2"}, {"k": "3"}, {"other": "4"}]),
+            ([], None),
+            (None, []),
+        ],
+    ),
+    case(
+        "off_chain_nested_list_struct_extras",
+        [
+            ("required", "spans[].a", "string", {}),
+            ("required", "spans[].b", "string", {}),
+            ("required", "grid[][].v", "int", {}),
+        ],
+        "spans array<struct<a:string, b:string>>, "
+        "grid array<array<struct<v:bigint, junk:string>>>",
+        [
+            ([("x", "y")], [[(1, "j"), (2, None)], []]),
+            (None, [[]]),
+            ([], None),
+        ],
+    ),
+    case(
+        "struct_holding_off_chain_list_extras",
+        [
+            ("required", "spans[].a", "string", {}),
+            ("required", "spans[].b", "string", {}),
+            ("required", "rec.items[].x", "int", {}),
+            ("optional", "rec.meta.k", "string", {}),
+        ],
+        "spans array<struct<a:string, b:string>>, "
+        "rec struct<items:array<struct<x:bigint, junk:string>>, meta:struct<k:string, z:int>, w:int>",
+        [
+            ([("x", "y")], ([(1, "j")], ("k", 2), 3)),
+            ([], (None, None, None)),
+            (None, None),
+        ],
+    ),
+]
+
 
 def _decls_to_fn(decls, required, optional, ignore_extra_fields):
     def schema_fn():
@@ -535,6 +587,42 @@ def test_divergence_nan_inf_int_rule(spark):
     assert got == {(0, "invalid_type"), (1, "invalid_type"), (2, "invalid_type")}
 
 
+@pytest.mark.parametrize(
+    "params,want",
+    [
+        ({"min": 0}, {2: "number_too_small"}),
+        ({}, {}),
+        ({"max": 5}, {0: "number_too_large", 1: "number_too_large"}),
+    ],
+)
+def test_nan_inf_number_rule_interpreter_matches_battery(spark, params, want):
+    """Under a ``number`` rule ±inf compares against bounds (exact in
+    ``Decimal``, as in Spark) and NaN sorts above every number (Spark's
+    ordering; the reference raises on it): never ``invalid_type``."""
+    from okay_spark import schema as dsl
+    from okay_spark.dynamic import validate_document
+
+    def schema_fn():
+        dsl.optional(ID, type="int?")
+        dsl.required("n", type="number", **params)
+
+    compiled = compile_schema(schema_fn)
+    df = spark.createDataFrame(
+        [(0, float("nan")), (1, float("inf")), (2, float("-inf"))],
+        schema=f"{ID} int, n double",
+    )
+    battery = {
+        r[ID]: r["rule"] for r in validate_dataframe(df, compiled, id_cols=[ID]).collect()
+    }
+    interpreted = {
+        row[ID]: rule
+        for row in df.collect()
+        for rule, _, _ in validate_document(compiled, row.asDict())
+    }
+    assert battery == want
+    assert interpreted == want
+
+
 def test_custom_rules(spark, okay_reference):
     """Custom validators run Arrow-batched and match the reference."""
     from okay_spark import schema as dsl
@@ -591,13 +679,18 @@ def test_custom_rules(spark, okay_reference):
 
 
 # ---------------------------------------------------------------------------
-# Both assemblies of the one lowering agree (needs no reference checkout):
+# Both assemblies of the one lowering agree, and both agree with the
+# per-document interpreter (needs no reference checkout):
 # explode(violations_array) == validate_dataframe as (id, path, rule,
-# expected, seq) multisets
+# expected, seq) multisets, and their (id, path, rule, expected) multiset
+# == dynamic.validate_document over each row's dict. The interpreter shares
+# no code with the lowering, so it catches an error common to both forms.
 # ---------------------------------------------------------------------------
 
 
 def _assert_forms_agree(df, compiled, id_col, violations_by_row):
+    from okay_spark.dynamic import validate_document
+
     def multiset(out):
         return Counter(
             (r[id_col], r["path"], r["rule"], r["expected"], r["seq"]) for r in out.collect()
@@ -606,10 +699,22 @@ def _assert_forms_agree(df, compiled, id_col, violations_by_row):
     want = multiset(validate_dataframe(df, compiled, id_cols=[id_col], include_seq=True))
     got = multiset(violations_by_row(df, compiled, id_cols=[id_col], include_seq=True))
     assert got == want, f"row-only={got - want} explode-only={want - got}"
+
+    interpreted: Counter = Counter()
+    for row in df.collect():
+        doc = row.asDict(recursive=True)
+        for rule, path, expected in validate_document(compiled, doc):
+            interpreted[(doc[id_col], path, rule, expected)] += 1
+    battery = Counter()
+    for (i, path, rule, expected, _), n in got.items():
+        battery[(i, path, rule, expected)] += n
+    assert battery == interpreted, (
+        f"battery-only={battery - interpreted} interpreter-only={interpreted - battery}"
+    )
     return got
 
 
-@pytest.mark.parametrize("decls,ddl,rows", CASES)
+@pytest.mark.parametrize("decls,ddl,rows", CASES + OFF_CHAIN_EXTRA_CASES)
 def test_row_form_matches_explode_form(spark, violations_by_row, decls, ddl, rows):
     df, compiled = _case_frame(spark, decls, ddl, rows)
     _assert_forms_agree(df, compiled, ID, violations_by_row)

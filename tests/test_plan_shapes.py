@@ -113,3 +113,30 @@ def test_drift_histogram_partial_agg(spark):
     plan = _final_plan(numeric_histogram(events, "value", 0.0, 400.0, 20))
     assert plan.count("Exchange hashpartitioning") == 1
     assert "partial" in plan.lower()
+
+
+def test_quarantine_runs_arrow_udf_once_per_branch(spark):
+    """A custom rule's Arrow UDF is evaluated once per row in each branch:
+    the ``n_violations > 0`` filter must not copy the UDF below the
+    projection of the quarantined branch."""
+    from okay_spark import required
+    from okay_spark.engine import quarantine
+    from okay_spark.messages import Message
+
+    def short(field, value):
+        return Message(type="too_short", field=field) if len(value) < 3 else None
+
+    def schema():
+        required("doc_id", type="int")
+        required("s", type="custom", validator=short)
+
+    df = spark.createDataFrame(
+        [(i, "x" * (i % 5)) for i in range(10)], "doc_id bigint, s string"
+    )
+    clean, quarantined = quarantine(df, schema)
+    for branch in (clean, quarantined):
+        assert _final_plan(branch).count("ArrowEvalPython") == 1
+    assert sorted(r["doc_id"] for r in clean.collect()) == [3, 4, 8, 9]
+    assert sorted((r["doc_id"], r["reasons"]) for r in quarantined.collect()) == [
+        (i, "s:too_short") for i in (0, 1, 2, 5, 6, 7)
+    ]
