@@ -3,11 +3,19 @@
 okay's extension point is a user callable ``(field, value, **kwargs) ->
 Message | None`` (``/root/reference/src/okay/type_validators/custom_validator.py:17-26``).
 Arbitrary Python cannot lower to Column expressions, so custom rules run as
-vectorized ``pandas_udf``\\ s: Arrow ships the relevant top-level column to
-Python in batches, the UDF walks each value down the remaining path steps
-(mirroring the index fan-out, ``index.py:37-51``) and applies the callable,
-returning an ``array<violation>`` that the engine concatenates with the
-native battery. Everything else in the battery stays JVM-side.
+Arrow UDFs (``F.arrow_udf``): Arrow ships the relevant top-level column to
+Python in batches as a ``pyarrow.Array``, :func:`_py_values` turns each batch
+into plain Python column by column (no pandas), and the UDF walks each value
+down the remaining path steps (mirroring the index fan-out,
+``index.py:37-51``), applies the callable and returns an ``array<violation>``
+that the engine concatenates with the native battery. Everything else in the
+battery stays JVM-side.
+
+Callables see the values ``Row.asDict(recursive=True)`` gives, which the
+per-document interpreter (:mod:`okay_spark.dynamic`) validates: ``None`` for
+every NULL (never NaN), ``int`` for integral columns, ``dict`` for structs
+and maps, ``list`` for arrays, and naive session-time-zone ``datetime`` for
+timestamps.
 
 Error semantics mirror the reference: a custom callable that raises, or
 returns something other than ``Message``/``None``, aborts the run with a
@@ -17,102 +25,74 @@ returns something other than ``Message``/``None``, aborts the run with a
 
 from __future__ import annotations
 
-import math
 from typing import Any
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    ByteType,
-    DataType,
-    IntegerType,
-    LongType,
-    MapType,
-    ShortType,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, DataType, StructType
 
 from .errors import SchemaError
 from .messages import Message, expected_json
 from .paths import ELEM, ROOT, ROW_KEY, Name, Step, parse_path
-from .rules import _STRING_TYPES, VIOL_ARRAY_DDL, is_arrow_routed
+from .rules import VIOL_ARRAY_DDL, is_arrow_routed
 from .schema import CompiledSchema, Rule
 
+# rules.VIOL_ARRAY_DDL as an Arrow type: what each UDF returns
+VIOL_ARRAY = pa.list_(
+    pa.struct(
+        [("path", pa.string()), ("rule", pa.string()), ("expected", pa.string()), ("seq", pa.int64())]
+    )
+)
 
-def _scalar_item(value: Any) -> Any:
-    if value is None:
-        return None
-    return value.item() if hasattr(value, "item") else value
 
+def _py_values(arr: pa.Array) -> list:
+    """``arr`` as a list of plain Python values, built column by column.
 
-def _build_converter(dtype: DataType, *, top: bool) -> Any:
-    """Compile a minimal pandas-cell -> plain-Python converter for ``dtype``,
-    or ``None`` when the cell already arrives as plain Python.
-
-    Conversion is driven by how Spark's Arrow deserializer actually delivers
-    values to a pandas_udf (measured, not assumed):
-
-    - a TOP-LEVEL field of the wrapper struct becomes its own pandas Series:
-      numeric/bool scalars are numpy scalars (``.item()`` needed so user
-      callables' ``isinstance(value, int)`` checks behave), strings are plain;
-    - NESTED values inside object cells come via Arrow ``as_py``: struct ->
-      plain dict, scalars plain (no numpy) — identity;
-    - list nodes (any level) surface as ``numpy.ndarray`` -> convert to
-      ``list`` (reference callables isinstance-check list);
-    - map nodes surface as a list of (key, value) tuples -> ``dict``.
-
-    Round 1 recursively rebuilt every value through a generic ``_to_py``
-    (dict comprehensions per struct, per-scalar dispatch) — 42% of the
-    headline bench. The compiled converter touches only the nodes that need
-    touching; a rule on a plain string column converts nothing at all."""
-    if isinstance(dtype, StructType):
-        subs = [(f.name, _build_converter(f.dataType, top=False)) for f in dtype.fields]
-        convs = [(n, c) for n, c in subs if c is not None]
-
-        def null_struct(v: Any) -> bool:
-            # a null struct can surface as NaN on some pandas paths
-            return v is None or (isinstance(v, float) and math.isnan(v))
-
-        if not convs:
-            return lambda v: None if null_struct(v) else v
-
-        def conv_struct(v: Any, _convs=convs) -> Any:
-            if null_struct(v):
-                return None
-            out = dict(v)
-            for n, c in _convs:
-                out[n] = c(out.get(n))
-            return out
-
-        return conv_struct
-    if isinstance(dtype, ArrayType):
-        c = _build_converter(dtype.elementType, top=False)
-        if c is None:
-            return lambda v: None if v is None else list(v)
-        return lambda v, _c=c: None if v is None else [_c(x) for x in v]
-    if isinstance(dtype, MapType):
-        c = _build_converter(dtype.valueType, top=False)
-        if c is None:
-            return lambda v: (
-                None if v is None else (v if isinstance(v, dict) else dict(v))
-            )
-
-        def conv_map(v: Any, _c=c) -> Any:
-            if v is None:
-                return None
-            items = v.items() if isinstance(v, dict) else v
-            return {k: _c(x) for k, x in items}
-
-        return conv_map
-    if top and not isinstance(dtype, _STRING_TYPES):
-        # top-level numeric/bool Series deliver numpy scalars (and NaN for
-        # null doubles — the documented artifact, preserved for parity with
-        # round 1: comparisons against NaN are False either way)
-        return _scalar_item
-    return None
+    Equals ``arr.to_pylist()`` with maps as dicts and tz-aware timestamps as
+    naive local times of their zone. ``to_pylist()`` on nested arrays makes
+    one Python object per Arrow scalar and is several times slower. Flat
+    arrays go through numpy's ``tolist()``, structs zip their child columns
+    into dicts, and lists and maps slice their converted children on the
+    offsets. ``.values``/``.keys``/``.items`` ignore a slice's offset, so
+    the children are sliced to ``[offsets[0], offsets[-1])`` first. The
+    validity mask alone decides where a value is ``None``: a NULL integer
+    never becomes a float, and a NaN double stays NaN."""
+    n = len(arr)
+    if arr.null_count == n:
+        return [None] * n
+    nulls = (
+        np.flatnonzero(~arr.is_valid().to_numpy(zero_copy_only=False)).tolist()
+        if arr.null_count
+        else []
+    )
+    t = arr.type
+    if pa.types.is_struct(t):
+        cols = [_py_values(arr.field(i)) for i in range(t.num_fields)]
+        names = [f.name for f in t]
+        values = [dict(zip(names, row)) for row in zip(*cols)]
+    elif pa.types.is_map(t) or pa.types.is_list(t) or pa.types.is_large_list(t):
+        offs = arr.offsets.to_numpy()
+        lo, hi = int(offs[0]), int(offs[-1])
+        bounds = (offs - lo).tolist()
+        if pa.types.is_map(t):
+            keys = _py_values(arr.keys.slice(lo, hi - lo))
+            items = _py_values(arr.items.slice(lo, hi - lo))
+            values = [dict(zip(keys[a:b], items[a:b])) for a, b in zip(bounds, bounds[1:])]
+        else:
+            elems = _py_values(arr.values.slice(lo, hi - lo))
+            values = [elems[a:b] for a, b in zip(bounds, bounds[1:])]
+    else:
+        if pa.types.is_timestamp(t) and t.tz is not None:
+            arr = pc.local_timestamp(arr)
+        elif pa.types.is_integer(t) and nulls:
+            arr = arr.fill_null(0)  # numpy would promote it to float64
+        values = arr.to_numpy(zero_copy_only=False).tolist()
+    for i in nulls:
+        values[i] = None
+    return values
 
 
 def _walk(value: Any, steps: list[Step], path: str, out: list[tuple[str, Any]]) -> None:
@@ -174,62 +154,14 @@ def _apply_arrow_rule(rule: Rule, ipath: str, value: Any, seq: int) -> dict | No
     return {"path": path, "rule": rule_name, "expected": expected, "seq": seq}
 
 
-def _field_array_conv(ft: DataType):
-    """Per-field element conversion for the struct-of-arrays ship format:
-    ``ndarray.tolist()`` is the C fast path (recursively yields plain Python
-    scalars/lists); nested struct/map elements then go through the compiled
-    nested converter so maps become dicts exactly as on the unpruned path.
-
-    Arrow->pandas promotes a NULLABLE integer (or boolean) field array to
-    float64-with-NaN, so a bare ``tolist()`` would hand the callable ``nan``
-    where a pure-Python caller (the reference) sees ``None`` — silently
-    flipping ``if field is None`` checks on declared rules. Integral/boolean
-    dtypes therefore normalize NaN back to None and promoted floats back to
-    int/bool (measured: a nullable-int batch arrives as ``None|7.0`` on the
-    unpruned path and arrived as ``nan|7.0`` here pre-fix; post-fix the
-    pruned path delivers the reference-faithful ``None|7``). The all-valid
-    case keeps the ndarray fast path (dtype stays integer/bool kind).
-    Float/double fields are deliberately NOT normalized: a null double
-    inside a struct surfaces as NaN on the unpruned path too (the
-    documented Arrow divergence in :func:`custom_violation_arrays`)."""
-    inner_c = _build_converter(ft, top=False)
-    if inner_c is None:
-        if isinstance(ft, (ByteType, ShortType, IntegerType, LongType)):
-
-            def conv_int(arr):
-                if hasattr(arr, "dtype") and arr.dtype.kind in "iu":
-                    return arr.tolist()
-                out = arr.tolist() if hasattr(arr, "tolist") else list(arr)
-                return [
-                    None if x is None or x != x else int(x) if isinstance(x, float) else x
-                    for x in out
-                ]
-
-            return conv_int
-        if isinstance(ft, BooleanType):
-
-            def conv_bool(arr):
-                if hasattr(arr, "dtype") and arr.dtype.kind == "b":
-                    return arr.tolist()
-                out = arr.tolist() if hasattr(arr, "tolist") else list(arr)
-                return [None if x is None or x != x else bool(x) for x in out]
-
-            return conv_bool
-        return lambda arr: arr.tolist() if hasattr(arr, "tolist") else list(arr)
-    return lambda arr, _c=inner_c: [
-        _c(x) for x in (arr.tolist() if hasattr(arr, "tolist") else arr)
-    ]
-
-
 def _maybe_prune(custom_rules, rest, top_dt: DataType, inner: Column):
     """Column pruning for custom rules: when every Arrow-routed rule on the
     field is a ``custom`` rule that declares its read-set via the engine-only
     ``arrow_fields=`` parameter, ship only those struct fields across Arrow.
 
-    Returns ``(ship_dt, ship_col, rebuild)``; ``rebuild`` is None when the
-    value ships unchanged (the caller then uses the generic compiled
-    converter), else a callable mapping the shipped cell back to the
-    original-shaped pruned value the user callable expects.
+    Returns ``(ship_col, rebuild)``; ``rebuild`` is None when the shipped
+    value is what the callable sees, else a callable mapping the shipped
+    cell back to the original-shaped pruned value the user callable expects.
 
     For ``array<struct>`` the pruned value ships as a STRUCT OF PLAIN ARRAYS
     (an element-validity boolean array plus one array per declared field),
@@ -240,60 +172,47 @@ def _maybe_prune(custom_rules, rest, top_dt: DataType, inner: Column):
     tightly), and an array-of-one-field-structs crosses Arrow at 4.65s vs
     1.30s for a plain array — which is why round 2's struct-rebuild pruning
     measured SLOWER than unpruned. ``getField`` extraction is columnar, the
-    validity mask is a cheap HOF, and the dict-per-element rebuild happens
-    Python-side on ``ndarray.tolist()`` output. Null elements stay
-    distinguishable via the mask (a callable's ``if span is not None`` must
-    not flip — tests/test_embed_and_cluster.py pins it). Opt-in: with no
-    declaration the full value crosses, byte-for-byte reference semantics."""
+    validity mask is a cheap HOF, and ``rebuild`` zips the per-field lists
+    into one dict per element. Null elements stay distinguishable via the
+    mask (a callable's ``if span is not None`` must not flip —
+    tests/test_embed_and_cluster.py pins it). Opt-in: with no declaration
+    the full value crosses, byte-for-byte reference semantics."""
     if rest:
-        return top_dt, inner, None  # pruning defined only for whole-column rules
+        return inner, None  # pruning defined only for whole-column rules
     declared = []
     for _seq, rule in custom_rules:
         if rule.type != "custom":
-            return top_dt, inner, None
+            return inner, None
         fields = rule.params.get("arrow_fields")
         if fields is None:
-            return top_dt, inner, None
+            return inner, None
         declared.extend(fields)
     if isinstance(top_dt, ArrayType) and isinstance(top_dt.elementType, StructType):
-        elem = top_dt.elementType
-        keep = [f for f in elem.fields if f.name in set(declared)]
-        if not keep or any(f.name == "_valid" for f in keep):
-            return top_dt, inner, None
-        names = [f.name for f in keep]
+        keep = [f.name for f in top_dt.elementType.fields if f.name in set(declared)]
+        if not keep or "_valid" in keep:
+            return inner, None
         ship = F.struct(
             F.transform(inner, lambda x: x.isNotNull()).alias("_valid"),
-            *[inner.getField(f.name).alias(f.name) for f in keep],
+            *[inner.getField(name).alias(name) for name in keep],
         )
-        convs = [_field_array_conv(f.dataType) for f in keep]
 
-        def rebuild(cell: Any, _names=names, _convs=convs) -> Any:
-            if cell is None or (isinstance(cell, float) and math.isnan(cell)):
+        def rebuild(cell: Any, _names=keep) -> Any:
+            if cell is None or cell["_valid"] is None:  # the source array was NULL
                 return None
-            valid = cell["_valid"]
-            if valid is None:  # the source array itself was NULL
-                return None
-            cols = [c(cell[n]) for n, c in zip(_names, _convs)]
             return [
                 dict(zip(_names, vals)) if ok else None
-                for ok, *vals in zip(valid, *cols)
+                for ok, *vals in zip(cell["_valid"], *(cell[n] for n in _names))
             ]
 
-        # ship_dt unused on this path: the caller routes through `rebuild`
-        # instead of compiling a converter from the datatype
-        return None, ship, rebuild
+        return ship, rebuild
     if isinstance(top_dt, StructType):
-        keep = [f for f in top_dt.fields if f.name in set(declared)]
+        keep = [f.name for f in top_dt.fields if f.name in set(declared)]
         if not keep:
-            return top_dt, inner, None
+            return inner, None
         # row-level when/struct stays in whole-stage codegen (the measured
         # blowup is specific to per-element branches inside transform)
-        pruned = F.when(
-            inner.isNotNull(),
-            F.struct(*[inner[f.name].alias(f.name) for f in keep]),
-        )
-        return StructType(keep), pruned, None
-    return top_dt, inner, None
+        return F.when(inner.isNotNull(), F.struct(*[inner[n].alias(n) for n in keep])), None
+    return inner, None
 
 
 def has_arrow_routed(compiled: CompiledSchema) -> bool:
@@ -309,15 +228,9 @@ def custom_violation_arrays(
     """One array<violation> Column per field that carries Arrow-routed rules
     (custom rules and Python-dialect regex string rules).
 
-    The relevant top-level column is wrapped in ``struct(v := col)`` before
-    crossing Arrow: Spark hands struct columns to a pandas_udf as a
-    ``pd.DataFrame`` of field columns, and the wrapper keeps top-level
-    null-ness observable (a bare null struct would otherwise be
-    indistinguishable from a struct of nulls). Known Arrow artifact: a null
-    double *inside* a struct surfaces as NaN, not None — custom callables
-    comparing against such fields see ``nan`` where the reference sees
-    ``None`` (documented divergence; comparisons involving NaN are False
-    either way)."""
+    The UDF takes the relevant top-level column itself: a NULL struct
+    arrives as a NULL slot of the ``StructArray``, so top-level null-ness
+    stays observable without a wrapper."""
     arrays: list[Column] = []
     for fidx, (path, spec) in enumerate(compiled.fields.items()):
         custom_rules = [
@@ -330,51 +243,44 @@ def custom_violation_arrays(
         steps = parse_path(path)
         rebuild = None
         if path == ROOT:
-            top_dt: DataType = StructType([f for f in df_schema.fields if f.name != ROW_KEY])
-            inner = F.struct(*[F.col("`" + c + "`").alias(c) for c in top_dt.names])
+            names = [f.name for f in df_schema.fields if f.name != ROW_KEY]
+            inner = F.struct(*[F.col("`" + c + "`").alias(c) for c in names])
             base_path, rest = ROOT, []
         else:
             head = steps[0]
             assert isinstance(head, Name)
             if head.name not in df_schema.names:
                 continue  # no instances (column statically absent)
-            top_dt = df_schema[head.name].dataType
             inner = F.col("`" + head.name + "`")
             base_path, rest = head.name, steps[1:]
-            top_dt, inner, rebuild = _maybe_prune(custom_rules, rest, top_dt, inner)
-        wrapped = F.struct(inner.alias("v"))
+            inner, rebuild = _maybe_prune(custom_rules, rest, df_schema[head.name].dataType, inner)
 
-        def make_udf(rules=custom_rules, dtype=top_dt, base=base_path, rem=rest, rb=rebuild):
-            conv = rb if rb is not None else _build_converter(dtype, top=True)
-
-            @F.pandas_udf(VIOL_ARRAY_DDL)
-            def run(col: pd.DataFrame) -> pd.Series:
-                # Series.tolist() is the C fast path: object cells come out
-                # as-is, numeric Series as plain Python scalars (so the
-                # compiled converter's top-scalar branch is usually a no-op)
-                values = col["v"].tolist()
+        def make_udf(rules=custom_rules, base=base_path, rem=rest, rb=rebuild):
+            @F.arrow_udf(VIOL_ARRAY_DDL)
+            def run(col: pa.Array) -> pa.Array:
                 results = []
-                for value in values:
-                    if conv is not None:
-                        value = conv(value)
+                for value in _py_values(col):
+                    if rb is not None:
+                        value = rb(value)
                     if not rem:
                         instances = [(base, value)]
                     else:
                         instances = []
                         _walk(value, rem, base, instances)
-                    viols = [
-                        v
-                        for ipath, val in instances
-                        if val is not None
-                        for seq, rule in rules
-                        if (v := _apply_arrow_rule(rule, ipath, val, seq)) is not None
-                    ]
-                    results.append(viols)
-                return pd.Series(results, dtype=object)
+                    results.append(
+                        [
+                            v
+                            for ipath, val in instances
+                            if val is not None
+                            for seq, rule in rules
+                            if (v := _apply_arrow_rule(rule, ipath, val, seq)) is not None
+                        ]
+                    )
+                return pa.array(results, type=VIOL_ARRAY)
 
             # nondeterministic: the optimizer must not copy the UDF into a
             # pushed-down filter (it would run twice per row)
             return run.asNondeterministic()
 
-        arrays.append(F.coalesce(make_udf()(wrapped), F.array().cast(VIOL_ARRAY_DDL)))
+        arrays.append(F.coalesce(make_udf()(inner), F.array().cast(VIOL_ARRAY_DDL)))
     return arrays

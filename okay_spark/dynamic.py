@@ -18,7 +18,9 @@ priority ladders, Decimal-coerced number comparisons
 Deliberate divergences (same as the engine): no crash on inf/nan under int
 rules (classified ``invalid_type``), no crash on NaN against ``number``
 bounds or options (Spark's ordering: NaN sorts above every number and
-equals itself), and no defaultdict-mutation crash on null list elements.
+equals itself), no defaultdict-mutation crash on null list elements, and
+a whole ``Decimal`` passes an ``int`` rule, as a decimal column does in the
+battery (JSON documents never hold a ``Decimal``).
 ±inf under ``number`` rules is no divergence: ``Decimal`` orders it
 against any bound, as Spark does.
 """
@@ -85,9 +87,13 @@ def _check_string(rule: Rule, path: str, value: Any) -> Violation | None:
 def _check_number(rule: Rule, path: str, value: Any, type_name: str) -> Violation | None:
     if type_name == "int":
         # the reference crashes on NaN/±inf under int rules; documented
-        # divergence: they are not whole numbers, so invalid_type
+        # divergence: they are not whole numbers, so invalid_type. A whole
+        # Decimal is an int, as the battery admits a DecimalType column
+        # (rules.type_admission).
         whole = isinstance(value, int) or (
             isinstance(value, float) and math.isfinite(value) and value.is_integer()
+        ) or (
+            isinstance(value, Decimal) and value.is_finite() and value == value.to_integral_value()
         )
         if not whole:
             return ("invalid_type", path, expected_json({"type": "int"}))

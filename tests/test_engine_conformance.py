@@ -15,6 +15,7 @@ those engine behaviors get dedicated divergence tests at the bottom.
 from __future__ import annotations
 
 from collections import Counter
+from decimal import Decimal
 
 import pytest
 
@@ -469,6 +470,19 @@ OFF_CHAIN_EXTRA_CASES = [
 ]
 
 
+# Decimal columns under ``int`` rules: the battery admits a scale-0 column
+# and, at scale > 0, a whole value. Checked against the interpreter only
+# (test_row_form_matches_explode_form), like OFF_CHAIN_EXTRA_CASES.
+DECIMAL_INT_CASES = [
+    case(
+        f"decimal_{scale}_under_int",
+        [("required", "n", "int", {"min": 0})],
+        f"n decimal(10,{scale})",
+        [(Decimal(v),) for v in values] + [(None,)],
+    )
+    for scale, values in [(0, ["5", "-5"]), (2, ["5", "-5", "5.25"])]
+]
+
 def _decls_to_fn(decls, required, optional, ignore_extra_fields):
     def schema_fn():
         optional(ID, type="int?")
@@ -714,7 +728,7 @@ def _assert_forms_agree(df, compiled, id_col, violations_by_row):
     return got
 
 
-@pytest.mark.parametrize("decls,ddl,rows", CASES + OFF_CHAIN_EXTRA_CASES)
+@pytest.mark.parametrize("decls,ddl,rows", CASES + OFF_CHAIN_EXTRA_CASES + DECIMAL_INT_CASES)
 def test_row_form_matches_explode_form(spark, violations_by_row, decls, ddl, rows):
     df, compiled = _case_frame(spark, decls, ddl, rows)
     _assert_forms_agree(df, compiled, ID, violations_by_row)
@@ -752,3 +766,41 @@ def test_row_form_matches_explode_form_custom(spark, violations_by_row):
     got = _assert_forms_agree(docs, compile_schema(schema_fn), "doc_id", violations_by_row)
     rules = {rule for (_, _, rule, _, _) in got}
     assert {"out_of_order_spans", "no_match"} <= rules, rules
+
+
+def test_custom_callable_sees_interpreter_values(spark, violations_by_row):
+    """A custom callable sees, on the Arrow path, the values the interpreter
+    hands it from ``row.asDict(recursive=True)``: None for every NULL (so
+    the callable never runs where only ``null_value`` is due), ints for
+    bigint cells and elements, NaN only for a real NaN."""
+    import datetime
+
+    from okay_spark import schema as dsl
+    from okay_spark.messages import Message
+
+    def probe(field, value, **kw):
+        return Message(type="saw", field=field, expected={"repr": repr(value)})
+
+    cols = ["n", "d", "a", "a[]", "s", "s.x", "m", "dt", "ts", "dec", "bin"]
+
+    def schema_fn():
+        dsl.optional(ID, type="int?")
+        for c in cols:
+            dsl.optional(c, type="custom", validator=probe)
+
+    df = spark.createDataFrame(
+        [
+            (0, 1, 1.5, [1, None], (None, 2), {"k": (1,), "z": None},
+             datetime.date(2020, 1, 2), datetime.datetime(2020, 1, 2, 3, 4, 5),
+             Decimal("1.50"), b"ab"),
+            (1, None, None, None, None, None, None, None, None, None),
+            (2, 3, float("nan"), [], (1.0, None), {}, datetime.date(1999, 12, 31),
+             datetime.datetime(1970, 1, 1), Decimal("-3.00"), b""),
+        ],
+        f"{ID} int, n bigint, d double, a array<bigint>, s struct<x:double,y:bigint>, "
+        "m map<string,struct<p:bigint>>, dt date, ts timestamp, dec decimal(10,2), bin binary",
+    )
+    got = _assert_forms_agree(df, compile_schema(schema_fn), ID, violations_by_row)
+    saw = {(i, path, parse_expected(e)["repr"]) for (i, path, rule, e, _) in got if rule == "saw"}
+    assert (2, "n", "3") in saw and (0, "a[1]", "None") not in saw
+    assert (2, "d", "nan") in saw and not any(i == 1 for i, _, _ in saw)

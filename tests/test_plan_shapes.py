@@ -140,3 +140,31 @@ def test_quarantine_runs_arrow_udf_once_per_branch(spark):
     assert sorted((r["doc_id"], r["reasons"]) for r in quarantined.collect()) == [
         (i, "s:too_short") for i in (0, 1, 2, 5, 6, 7)
     ]
+
+
+def test_custom_rule_arrow_udf_takes_the_column(spark):
+    """A custom rule runs as one Arrow UDF over the column itself: no
+    ``struct(v, ...)`` wrapper around its argument."""
+    import re
+
+    from okay_spark import required
+    from okay_spark.messages import Message
+
+    def empty(field, value):
+        return Message(type="empty_spans", field=field) if not value else None
+
+    def schema():
+        required("doc_id", type="int")
+        required("spans", type="custom", validator=empty)
+
+    df = spark.createDataFrame(
+        [(1, [(0, "a")]), (2, []), (3, None)], "doc_id bigint, spans array<struct<o:int,t:string>>"
+    )
+    out = validate_dataframe(df, schema)
+    plan = _final_plan(out)
+    assert plan.count("ArrowEvalPython") == 1
+    assert re.search(r"ArrowEvalPython \[run\(spans#\d+\)#\d+\]", plan), plan
+    assert sorted((r["doc_id"], r["rule"]) for r in out.collect()) == [
+        (2, "empty_spans"),
+        (3, "null_value"),
+    ]

@@ -13,11 +13,10 @@ import pytest
 
 
 def test_arrow_fields_null_int_field_sees_none_and_int(spark):
-    """A declared nullable int field crosses Arrow as float64+NaN; the pruned
-    path must hand the callable None for the null and a plain int for valid
-    values (reference semantics), and the is-None decision must match the
-    unpruned path (ADVICE r3: pre-fix the pruned path delivered nan/7.0,
-    silently flipping `field is None` checks between declared and
+    """A nullable int field must reach the callable as None for the null and
+    a plain int for valid values (reference semantics), on the pruned and
+    the unpruned path alike (ADVICE r3: the pruned path once delivered
+    nan/7.0, silently flipping `field is None` checks between declared and
     undeclared rules)."""
     from okay_spark import ignore_extra_fields, required
     from okay_spark.engine import validate_dataframe
@@ -50,11 +49,10 @@ def test_arrow_fields_null_int_field_sees_none_and_int(spark):
     full = {
         r["rule"] for r in validate_dataframe(df, mk(False), id_cols=["doc_id"]).collect()
     }
-    # pruned: reference-faithful None + int
+    # both paths: reference-faithful None + int (the unpruned path used to
+    # promote the nullable int to float 7.0 through pandas)
     assert pruned == {"seen_None|int:7"}
-    # unpruned keeps its documented Arrow artifact (float promotion) but the
-    # None decision agrees; pin it so a silent change is noticed
-    assert full == {"seen_None|float:7.0"}
+    assert full == {"seen_None|int:7"}
 
 
 def test_arrow_fields_all_valid_int_field_stays_int(spark):
