@@ -5112,7 +5112,7 @@ g2 AS (
 SELECT source, n_docs, n_tokens,
   CAST(n_tokens AS DOUBLE) / CAST(t AS DOUBLE) AS share,
   scaled / d AS weight,
-  ((scaled / d) * 10000000.0) / CAST(n_tokens AS DOUBLE) AS epochs
+  ((scaled / d) * 10000000.0e0) / CAST(n_tokens AS DOUBLE) AS epochs
 FROM g2 CROSS JOIN den
 """
 
@@ -6399,17 +6399,17 @@ WITH t AS (
   FROM documents
 ), r AS (
   SELECT lang, len(toks)::BIGINT AS n_tokens,
-    CASE WHEN n_chars > 0 THEN punct / n_chars ELSE 0.0 END AS punct_ratio,
+    CASE WHEN n_chars > 0 THEN punct / n_chars ELSE 0.0e0 END AS punct_ratio,
     CASE WHEN len(toks) > 0
          THEN len(list_filter(toks, x -> list_contains({_ALL_STOPS}, lower(x))))::DOUBLE
               / len(toks)
-         ELSE 0.0 END AS stop_ratio
+         ELSE 0.0e0 END AS stop_ratio
   FROM t
 ), w AS (
   SELECT lang AS grp,
-    0.4 * LEAST(1.0, n_tokens / 64.0)
-      + 0.3 * GREATEST(0.0, 1.0 - punct_ratio * 10)
-      + 0.3 * LEAST(1.0, stop_ratio * 3) AS wq
+    0.4e0 * LEAST(1.0e0, n_tokens / 64.0e0)
+      + 0.3e0 * GREATEST(0.0e0, 1.0e0 - punct_ratio * 10e0)
+      + 0.3e0 * LEAST(1.0e0, stop_ratio * 3e0) AS wq
   FROM r
 ), m AS (
   SELECT grp, CAST(count(*) AS BIGINT) AS n,

@@ -1,15 +1,20 @@
-"""Arrow-batched evaluation of ``custom`` rules (reference operator O16).
+"""Arrow-batched evaluation of the battery's Arrow-routed rules (reference
+operator O16 and Python-dialect regex).
 
 okay's extension point is a user callable ``(field, value, **kwargs) ->
 Message | None`` (``/root/reference/src/okay/type_validators/custom_validator.py:17-26``).
 Arbitrary Python cannot lower to Column expressions, so custom rules run as
-Arrow UDFs (``F.arrow_udf``): Arrow ships the relevant top-level column to
-Python in batches as a ``pyarrow.Array``, :func:`_py_values` turns each batch
-into plain Python column by column (no pandas), and the UDF walks each value
-down the remaining path steps (mirroring the index fan-out,
-``index.py:37-51``), applies the callable and returns an ``array<violation>``
-that the engine concatenates with the native battery. Everything else in the
-battery stays JVM-side.
+Arrow UDFs (``F.arrow_udf``), and so do ``string`` rules whose regex uses
+Python-only dialect. Arrow ships the relevant top-level column to Python in
+batches as a ``pyarrow.Array``, :func:`_py_values` turns each batch into
+plain Python column by column (no pandas), and the UDF walks each value down
+the remaining path steps (mirroring the index fan-out, ``index.py:37-51``).
+Every rule then runs through the per-document interpreter's
+:func:`okay_spark.dynamic._check_rule`, so the Arrow pass and
+:mod:`okay_spark.dynamic` cannot disagree on a value. The UDF returns an
+``array<violation>`` that the engine concatenates with the native battery.
+Everything else in the battery stays JVM-side. :func:`_py_values` is also
+the seam through which ``dynamic.validate_json`` reads its JSON column.
 
 Callables see the values ``Row.asDict(recursive=True)`` gives, which the
 per-document interpreter (:mod:`okay_spark.dynamic`) validates: ``None`` for
@@ -34,11 +39,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, StructType
 
-from .errors import SchemaError
-from .messages import Message, expected_json
+from .dynamic import _check_rule
 from .paths import ELEM, ROOT, ROW_KEY, Name, Step, parse_path
 from .rules import VIOL_ARRAY_DDL, is_arrow_routed
-from .schema import CompiledSchema, Rule
+from .schema import CompiledSchema
 
 # rules.VIOL_ARRAY_DDL as an Arrow type: what each UDF returns
 VIOL_ARRAY = pa.list_(
@@ -109,49 +113,6 @@ def _walk(value: Any, steps: list[Step], path: str, out: list[tuple[str, Any]]) 
     assert isinstance(step, Name)
     if isinstance(value, dict) and step.name in value:
         _walk(value[step.name], rest, f"{path}.{step.name}", out)
-
-
-def _apply_custom(rule: Rule, ipath: str, value: Any, seq: int) -> dict | None:
-    fn = rule.params["validator"]
-    kwargs = rule.params["kwargs"]
-    try:
-        message = fn(ipath, value, **kwargs)
-    except Exception as e:  # noqa: BLE001 - parity with reference
-        raise SchemaError(
-            f"Custom validation function `{fn.__name__}()` specified for field "
-            f"'{ipath}' raised exception `{type(e).__name__}`."
-        ) from e
-    if message is None:
-        return None
-    if not isinstance(message, Message) and type(message).__name__ != "Message":
-        raise SchemaError(
-            f"Custom validation function `{fn.__name__}()` specified for field "
-            f"'{ipath}' must return a `Message` object, but it returned a "
-            f"`{type(message).__name__}` object instead."
-        )
-    return {
-        "path": getattr(message, "field", ipath),
-        "rule": message.type,
-        "expected": expected_json(getattr(message, "expected", None)),
-        "seq": seq,
-    }
-
-
-def _apply_arrow_rule(rule: Rule, ipath: str, value: Any, seq: int) -> dict | None:
-    """Evaluate one Arrow-routed rule on one non-null instance value.
-
-    ``custom`` rules run the user callable; Python-dialect ``string`` rules
-    run the dynamic interpreter's exact Python ``re`` twin (same priority
-    ladder / OR-semantics as the reference, ``string_validator.py:36-70``)."""
-    if rule.type == "custom":
-        return _apply_custom(rule, ipath, value, seq)
-    from .dynamic import _check_string
-
-    v = _check_string(rule, ipath, value)
-    if v is None:
-        return None
-    rule_name, path, expected = v
-    return {"path": path, "rule": rule_name, "expected": expected, "seq": seq}
 
 
 def _maybe_prune(custom_rules, rest, top_dt: DataType, inner: Column):
@@ -269,11 +230,11 @@ def custom_violation_arrays(
                         _walk(value, rem, base, instances)
                     results.append(
                         [
-                            v
+                            dict(zip(("rule", "path", "expected"), v), seq=seq)
                             for ipath, val in instances
                             if val is not None
                             for seq, rule in rules
-                            if (v := _apply_arrow_rule(rule, ipath, val, seq)) is not None
+                            if (v := _check_rule(rule, ipath, val)) is not None
                         ]
                     )
                 return pa.array(results, type=VIOL_ARRAY)

@@ -5,9 +5,14 @@ resolves against the static column type (SURVEY.md §1.5). Real okay users
 validate arbitrary dicts — heterogeneous types, truly absent keys, extra
 keys anywhere. This module lifts that exact use case to a DataFrame: a
 column of JSON documents is validated per row with a faithful Python
-interpreter of the compiled schema, executed Arrow-batched via
-``mapInPandas`` (one Python round-trip per batch; this is the compatibility
-path, not the 10^12-row hot path — the typed battery stays zero-Python).
+interpreter of the compiled schema, run as an Arrow UDF over the JSON column
+(one Python round-trip per batch; this is the compatibility path, not the
+10^12-row hot path — the typed battery stays zero-Python).
+
+This interpreter is the only Python evaluator of okay rules: the Arrow pass
+of the typed battery (:mod:`okay_spark.compat`) and the per-value
+validators (:mod:`okay_spark.validators`) call :func:`_check_rule` and
+:func:`_call_custom` too.
 
 Semantics mirror the reference exactly (differentially tested against it):
 index walk pruned to schema fields (``/root/reference/src/okay/index.py:11-51``),
@@ -31,9 +36,9 @@ import json
 import math
 import re
 from decimal import Decimal
-from typing import Any, Iterator
+from typing import Any, Callable
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from .errors import SchemaError
@@ -127,27 +132,37 @@ def _check_number(rule: Rule, path: str, value: Any, type_name: str) -> Violatio
     return None
 
 
+def _call_custom(
+    fn: Callable[..., Any], kwargs: dict, path: str, value: Any, error_field: str | None
+) -> Message | None:
+    """Run a custom callable as okay does (``custom_validator.py:17-26``):
+    ``fn(path, value, **kwargs)``. A raise becomes a ``SchemaError`` with the
+    original error as its cause, and so does a return that is neither
+    ``None`` nor a ``Message``. The error text names ``error_field``."""
+    try:
+        msg = fn(path, value, **kwargs)
+    except Exception as e:  # noqa: BLE001 - parity with the reference
+        raise SchemaError(
+            f"Custom validation function `{fn.__name__}()` specified for field "
+            f"'{error_field}' raised exception `{type(e).__name__}`."
+        ) from e
+    if msg is not None and not isinstance(msg, Message) and type(msg).__name__ != "Message":
+        raise SchemaError(
+            f"Custom validation function `{fn.__name__}()` specified for field "
+            f"'{error_field}' must return a `Message` object, but it returned a "
+            f"`{type(msg).__name__}` object instead."
+        )
+    return msg
+
+
 def _check_rule(rule: Rule, path: str, value: Any) -> Violation | None:
     t = rule.type
     if t == "any":
         return None
     if t == "custom":
-        fn = rule.params["validator"]
-        try:
-            msg = fn(path, value, **rule.params["kwargs"])
-        except Exception as e:  # noqa: BLE001 - parity
-            raise SchemaError(
-                f"Custom validation function `{fn.__name__}()` specified for "
-                f"field '{path}' raised exception `{type(e).__name__}`."
-            ) from e
+        msg = _call_custom(rule.params["validator"], rule.params["kwargs"], path, value, path)
         if msg is None:
             return None
-        if not isinstance(msg, Message) and type(msg).__name__ != "Message":
-            raise SchemaError(
-                f"Custom validation function `{fn.__name__}()` specified for "
-                f"field '{path}' must return a `Message` object, but it "
-                f"returned a `{type(msg).__name__}` object instead."
-            )
         return (msg.type, getattr(msg, "field", path), expected_json(getattr(msg, "expected", None)))
     if t == "string":
         return _check_string(rule, path, value)
@@ -305,6 +320,13 @@ def validate_document(compiled: CompiledSchema, doc: Any) -> list[Violation]:
 # ---------------------------------------------------------------------------
 
 
+# what validate_json's UDF returns per document: its (path, rule, expected) rows
+_JSON_VIOLATIONS_DDL = "array<struct<path:string,rule:string,expected:string>>"
+_JSON_VIOLATIONS = pa.list_(
+    pa.struct([("path", pa.string()), ("rule", pa.string()), ("expected", pa.string())])
+)
+
+
 def validate_json(
     df: DataFrame,
     json_col: str,
@@ -314,35 +336,39 @@ def validate_json(
 ) -> DataFrame:
     """Validate a column of JSON documents; returns
     ``(*id_cols, path, rule, expected)``. Unparseable/null JSON yields one
-    ``invalid_json`` violation at the root."""
+    ``invalid_json`` violation at the root.
+
+    Only the JSON column crosses into Python, through the same Arrow seam
+    as the battery's custom rules (``compat._py_values``); the id columns
+    stay in the JVM beside the UDF's result."""
+    from .compat import _py_values  # compat imports this module
+
     compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
     id_cols = id_cols if id_cols is not None else [c for c in df.columns if c == "doc_id"]
-    out_ddl = ", ".join(
-        [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in id_cols]
-        + ["path string", "rule string", "expected string"]
-    )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                ids = tuple(rec[c] for c in id_cols)
-                raw = rec[json_col]
-                if raw is None:
-                    rows.append((*ids, ".", "invalid_json", None))
-                    continue
-                try:
-                    doc = json.loads(raw)
-                except (ValueError, TypeError):
-                    rows.append((*ids, ".", "invalid_json", None))
-                    continue
-                for rule_name, path, expected in validate_document(compiled, doc):
-                    rows.append((*ids, path, rule_name, expected))
-            yield pd.DataFrame(
-                rows, columns=[*id_cols, "path", "rule", "expected"]
-            )
+    def document_violations(raw: str | None) -> list[tuple[str, str, str | None]]:
+        try:
+            doc = json.loads(raw)
+        except (ValueError, TypeError):
+            return [(".", "invalid_json", None)]
+        return [(path, rule, expected) for rule, path, expected in validate_document(compiled, doc)]
 
-    return df.select(*id_cols, json_col).mapInPandas(kernel, out_ddl)
+    @F.arrow_udf(_JSON_VIOLATIONS_DDL)
+    def kernel(col: pa.Array) -> pa.Array:
+        return pa.array([document_violations(v) for v in _py_values(col)], type=_JSON_VIOLATIONS)
+
+    return df.select(*id_cols, F.inline(kernel(F.col(json_col))))
+
+
+def _message(violation: Violation) -> Message:
+    """A violation tuple as the reference's ``Message``: ``type``, ``field``
+    and, when the rule has parameters, ``expected``."""
+    rule_name, path, expected = violation
+    msg = Message(type=rule_name, field=path)
+    parsed = parse_expected(expected)
+    if parsed is not None:
+        msg.add(expected=parsed)
+    return msg
 
 
 def validate(schema, document, message_values=None) -> list[Message]:
@@ -359,14 +385,7 @@ def validate(schema, document, message_values=None) -> list[Message]:
     type/field/expected) are not forwarded through the interpreter's
     violation tuples.
     """
-    compiled = compile_cached(schema)
-    messages = []
-    for rule_name, path, expected in validate_document(compiled, document):
-        kwargs: dict[str, Any] = {"field": path}
-        parsed = parse_expected(expected)
-        if parsed is not None:
-            kwargs["expected"] = parsed
-        messages.append(Message(type=rule_name, **kwargs))
+    messages = [_message(v) for v in validate_document(compile_cached(schema), document)]
     if message_values:
         for m in messages:
             m.add(**message_values)

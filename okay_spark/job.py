@@ -62,7 +62,6 @@ from .checks import (  # noqa: F401  partition_summary, rule_summary: re-exporte
     rule_summary,
     uniqueness_violations,
 )
-from .engine import validate_dataframe
 from .io import local_frame, read_table, write_table
 from .schema import compile_cached
 from .state import run_resumable_validation

@@ -18,8 +18,8 @@ from __future__ import annotations
 
 from typing import Any
 
-from .errors import SchemaError
-from .messages import Message, parse_expected
+from .dynamic import _call_custom, _check_rule, _message
+from .messages import Message
 from .schema import Rule, _normalize_params, compile_schema
 
 
@@ -36,17 +36,8 @@ class _TypeValidator:
         self._rule = Rule(type=self.type_name, nullable=False, implicit=False, params=self.params)
 
     def __call__(self, field: str, value: Any) -> Message | None:
-        from .dynamic import _check_rule
-
         v = _check_rule(self._rule, field, value)
-        if v is None:
-            return None
-        rule_name, path, expected = v
-        msg = Message(type=rule_name, field=path)
-        parsed = parse_expected(expected)
-        if parsed is not None:
-            msg.add(expected=parsed)
-        return msg
+        return None if v is None else _message(v)
 
 
 class AnyValidator(_TypeValidator):
@@ -91,22 +82,7 @@ class CustomValidator:
         self._kwargs = self.params["kwargs"]
 
     def __call__(self, field: str, value: Any) -> Message | None:
-        try:
-            msg = self._fn(field, value, **self._kwargs)
-        except Exception as e:  # noqa: BLE001 - parity with the reference
-            raise SchemaError(
-                f"Custom validation function `{self._fn.__name__}()` specified for "
-                f"field '{self.field}' raised exception `{type(e).__name__}`."
-            ) from e
-        if msg is None:
-            return None
-        if not isinstance(msg, Message) and type(msg).__name__ != "Message":
-            raise SchemaError(
-                f"Custom validation function `{self._fn.__name__}()` specified for "
-                f"field '{self.field}' must return a `Message` object, but it "
-                f"returned a `{type(msg).__name__}` object instead."
-            )
-        return msg
+        return _call_custom(self._fn, self._kwargs, field, value, self.field)
 
 
 _VALIDATOR_CLASSES = {

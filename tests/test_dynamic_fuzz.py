@@ -129,3 +129,41 @@ def test_dynamic_fuzz_matches_reference(spark, okay_reference, seed):
             f"seed={seed} doc={doc!r}\nengine-only={engine[i] - want}\n"
             f"oracle-only={want - engine[i]}\ndecls={decls}"
         )
+
+
+@pytest.mark.parametrize("seed", [11, 12, 13])
+def test_validate_json_matches_interpreter(spark, seed):
+    """validate_json against ``validate_document`` over ``json.loads``, with
+    no reference checkout: the fuzz documents of ``seed`` plus a NULL body,
+    malformed JSON under a NULL id, a non-object root and an id above 2^53
+    (not exact as a double). Each id's (rule, path, expected) multiset must
+    match; a NULL or unparseable body is one root ``invalid_json``."""
+    from collections import Counter
+
+    from okay_spark import schema as dsl
+    from okay_spark.dynamic import validate_document, validate_json
+    from okay_spark.schema import compile_schema
+
+    rng = random.Random(seed)
+    docs = [_doc(rng) for _ in range(150)]
+    compiled = compile_schema(_schema_fn(_pick_decls(rng), dsl.required, dsl.optional))
+    big = 2**53 + 1
+    rows = [(i, json.dumps(d)) for i, d in enumerate(docs)]
+    # an undeclared key, so the big id always has a violation to carry
+    rows += [(1000, None), (None, "{not json"), (1001, "[1, 2]"), (big, json.dumps({"zz": 1}))]
+    df = spark.createDataFrame(rows, f"{ID} bigint, body string")
+
+    got: dict = {}
+    for r in validate_json(df, "body", compiled, id_cols=[ID]).collect():
+        got.setdefault(r[ID], Counter())[(r["rule"], r["path"], r["expected"])] += 1
+    want: dict = {}
+    for i, body in rows:
+        try:
+            viols = validate_document(compiled, json.loads(body))
+        except (TypeError, ValueError):
+            viols = [("invalid_json", ".", None)]
+        if viols:
+            want[i] = Counter(viols)
+    assert got == want
+    assert got[None] == got[1000] == Counter({("invalid_json", ".", None): 1})
+    assert got[big][("extra_field", "zz", None)] == 1

@@ -168,3 +168,22 @@ def test_custom_rule_arrow_udf_takes_the_column(spark):
         (2, "empty_spans"),
         (3, "null_value"),
     ]
+
+
+def test_validate_json_arrow_udf_takes_only_the_json_column(spark):
+    """validate_json runs one Arrow UDF over the JSON column alone; the id
+    columns stay in the JVM and meet its output in a Generate."""
+    import re
+
+    from okay_spark import required
+    from okay_spark.dynamic import validate_json
+
+    def schema():
+        required("a", type="int")
+
+    df = spark.createDataFrame([(1, '{"a": 1}'), (2, '{"a": "x"}'), (3, None)], "doc_id bigint, body string")
+    out = validate_json(df, "body", schema)
+    plan = _final_plan(out)
+    assert plan.count("ArrowEvalPython") == 1 and "MapInPandas" not in plan
+    assert re.search(r"ArrowEvalPython \[kernel\(body#\d+\)#\d+\]", plan), plan
+    assert sorted((r["doc_id"], r["rule"]) for r in out.collect()) == [(2, "invalid_type"), (3, "invalid_json")]
