@@ -19,7 +19,7 @@ from pyspark.sql.types import BooleanType, DecimalType, NumericType
 
 from .engine import violations_array
 from .salt import partition_salt, replicate_with_salts
-from .schema import CompiledSchema, compile_cached
+from .schema import compile_cached
 
 # ---------------------------------------------------------------------------
 # Per-column statistics (one aggregation pass over the table)
@@ -100,7 +100,7 @@ def schema_table_diff(df: DataFrame, schema) -> DataFrame:
     from .plan_exploded import _resolves
     from .paths import parse_path
 
-    compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
+    compiled = compile_cached(schema)
     rows: list[tuple[str, str]] = []
 
     for path, spec in compiled.fields.items():
@@ -831,7 +831,7 @@ def partition_summary(
     ``custom`` (or Python-dialect regex) rules, which are Arrow-batched as in
     :func:`okay_spark.engine.validate_dataframe`."""
     parts = [partition_cols] if isinstance(partition_cols, str) else list(partition_cols)
-    compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
+    compiled = compile_cached(schema)
     n_viol = F.size(violations_array(df.schema, compiled))
     return (
         df.select(*parts, n_viol.alias("_nv"))
@@ -854,7 +854,7 @@ def partition_summary(
 def rule_summary(df: DataFrame, schema, partition_cols: list[str] | str = "part") -> DataFrame:
     """Violation counts per (partition, rule, path) — rollup-ready."""
     parts = [partition_cols] if isinstance(partition_cols, str) else list(partition_cols)
-    compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
+    compiled = compile_cached(schema)
     return (
         df.select(*parts, F.explode(violations_array(df.schema, compiled)).alias("_v"))
         .groupBy(*parts, F.col("_v.rule").alias("rule"), F.col("_v.path").alias("path"))

@@ -12,7 +12,9 @@ the remaining path steps (mirroring the index fan-out, ``index.py:37-51``).
 Every rule then runs through the per-document interpreter's
 :func:`okay_spark.dynamic._check_rule`, so the Arrow pass and
 :mod:`okay_spark.dynamic` cannot disagree on a value. The UDF returns an
-``array<violation>`` that the engine concatenates with the native battery.
+``array<violation>``; :func:`custom_violation_arrays` hands these to
+``plan_exploded._lower`` as level-0 arrays of the one battery lowering, so
+both of its assemblies carry them and no caller concatenates them.
 Everything else in the battery stays JVM-side. :func:`_py_values` is also
 the seam through which ``dynamic.validate_json`` reads its JSON column.
 
@@ -41,7 +43,7 @@ from pyspark.sql.types import ArrayType, DataType, StructType
 
 from .dynamic import _check_rule
 from .paths import ELEM, ROOT, ROW_KEY, Name, Step, parse_path
-from .rules import VIOL_ARRAY_DDL, is_arrow_routed
+from .rules import VIOL_ARRAY_DDL, empty_violations, is_arrow_routed
 from .schema import CompiledSchema
 
 # rules.VIOL_ARRAY_DDL as an Arrow type: what each UDF returns
@@ -176,18 +178,12 @@ def _maybe_prune(custom_rules, rest, top_dt: DataType, inner: Column):
     return inner, None
 
 
-def has_arrow_routed(compiled: CompiledSchema) -> bool:
-    """True when any rule needs the Arrow pass: custom rules, plus string
-    rules auto-routed there because their regex uses Python-only dialect
-    constructs (see :func:`okay_spark.rules.is_arrow_routed`)."""
-    return any(is_arrow_routed(r) for f in compiled.fields.values() for r in f.rules)
-
-
 def custom_violation_arrays(
     df_schema: StructType, compiled: CompiledSchema
 ) -> list[Column]:
     """One array<violation> Column per field that carries Arrow-routed rules
-    (custom rules and Python-dialect regex string rules).
+    (custom rules and Python-dialect regex string rules); empty when no
+    rule is Arrow-routed. Called only by ``plan_exploded._lower``.
 
     The UDF takes the relevant top-level column itself: a NULL struct
     arrives as a NULL slot of the ``StructArray``, so top-level null-ness
@@ -243,5 +239,5 @@ def custom_violation_arrays(
             # pushed-down filter (it would run twice per row)
             return run.asNondeterministic()
 
-        arrays.append(F.coalesce(make_udf()(inner), F.array().cast(VIOL_ARRAY_DDL)))
+        arrays.append(F.coalesce(make_udf()(inner), empty_violations()))
     return arrays

@@ -343,7 +343,7 @@ def validate_json(
     stay in the JVM beside the UDF's result."""
     from .compat import _py_values  # compat imports this module
 
-    compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
+    compiled = compile_cached(schema)
     id_cols = id_cols if id_cols is not None else [c for c in df.columns if c == "doc_id"]
 
     def document_violations(raw: str | None) -> list[tuple[str, str, str | None]]:

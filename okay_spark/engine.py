@@ -15,36 +15,26 @@ assemblies to callers:
 
 No Python runs per row except for ``custom`` rules (and regex rules in
 Python-only dialect), evaluated Arrow-batched in :mod:`okay_spark.compat`;
-both entry points merge them.
+the lowering carries them as level-0 arrays, so both assemblies include them
+and ``validate_dataframe`` scans its input once.
 
-``plan_exploded.exploded_violations`` and ``compat.custom_violation_arrays``
-are looked up through their modules at call time, so a wrapper installed on
-those module attributes (the benchmark's per-layer tracer) sees every call.
+``plan_exploded.exploded_violations`` is looked up through its module at call
+time (and ``_lower`` looks up ``compat.custom_violation_arrays`` the same
+way), so a wrapper installed on those module attributes (the benchmark's
+per-layer tracer) sees every call.
 """
 
 from __future__ import annotations
 
 from typing import Iterable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from . import compat, plan_exploded
-from .rules import empty_violations
-from .schema import CompiledSchema, compile_cached
+from . import plan_exploded
+from .schema import compile_cached
 
-
-def violations_array(df_schema: StructType, compiled: CompiledSchema) -> Column:
-    """The full battery as ONE ``array<violation>`` Column per row, custom
-    and Arrow-routed rules included. Violation semantics are those of
-    :func:`validate_dataframe`: exploding this array yields the same
-    multiset of violations."""
-    viol = plan_exploded.row_violations(df_schema, compiled)
-    if compat.has_arrow_routed(compiled):
-        for arr in compat.custom_violation_arrays(df_schema, compiled):
-            viol = F.concat(viol, arr)
-    return viol
+violations_array = plan_exploded.row_violations
 
 
 def validate_dataframe(
@@ -72,18 +62,13 @@ def validate_dataframe(
     The root column ``__ok_row`` (``paths.ROW_KEY``) is reserved for the
     job's per-row key: it is never reported as an extra field.
     """
-    compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
+    compiled = compile_cached(schema)
     if id_cols is None:
         id_cols = [c for c in df.columns if c == "doc_id"]
     id_cols = list(id_cols)
     ids = [plan_exploded._q(c).alias(c) for c in id_cols]
 
     exploded = plan_exploded.exploded_violations(df, compiled).select(*ids, F.col("_v"))
-    if compat.has_arrow_routed(compiled):
-        custom = empty_violations()
-        for arr in compat.custom_violation_arrays(df.schema, compiled):
-            custom = F.concat(custom, arr)
-        exploded = exploded.unionByName(df.select(*ids, F.explode(custom).alias("_v")))
     out_cols = [F.col(c) for c in id_cols] + [
         F.col("_v.path").alias("path"),
         F.col("_v.rule").alias("rule"),
@@ -130,7 +115,7 @@ def quarantine(
     two-frame form exists because most callers keep only ``clean`` and
     route ``quarantined`` to a side sink.
     """
-    compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
+    compiled = compile_cached(schema)
     if id_cols is None:
         id_cols = [c for c in df.columns if c == "doc_id"]
     id_cols = list(id_cols)

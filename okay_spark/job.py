@@ -102,7 +102,7 @@ def run_full_validation(
     snapshot, schema fingerprint) pair already completed it. Earlier this
     passed the schema fingerprint as the snapshot, which made a nightly run
     over NEW data with an unchanged schema skip everything."""
-    compiled = compile_cached(schema) if callable(schema) else schema
+    compiled = compile_cached(schema)
     t0 = time.time()
 
     def checks():

@@ -2,8 +2,9 @@
 
 The reference models messages as tiny attribute bags
 (``/root/reference/src/okay/message.py:1-11``). We keep that driver-side object
-for the dict-compat path and conformance tests, and additionally define the
-*columnar* violation record the distributed engine emits:
+for the dict-compat path and conformance tests. The *columnar* violation
+record the distributed engine emits is declared once, as
+``okay_spark.rules.VIOL_STRUCT_DDL``:
 
     (path: string, rule: string, expected: string-json, seq: long)
 
@@ -23,30 +24,6 @@ from __future__ import annotations
 
 import json
 from typing import Any
-
-MESSAGE_TYPES = frozenset(
-    {
-        "invalid_type",
-        "null_value",
-        "missing_field",
-        "extra_field",
-        "no_match",
-        "string_too_short",
-        "string_too_long",
-        "invalid_string_option",
-        "number_too_small",
-        "number_too_large",
-        "invalid_number_option",
-        "too_few_elements",
-        "too_many_elements",
-    }
-)
-
-# Columnar violation record emitted by the engine (DDL form, used for casting
-# empty literals and for the violations sink schema).
-VIOLATION_FIELDS_DDL = "path string, rule string, expected string, seq bigint"
-VIOLATION_ARRAY_DDL = f"array<struct<{VIOLATION_FIELDS_DDL}>>"
-
 
 class Message:
     """Attribute-bag validation message (driver-side / dict-compat path).

@@ -17,8 +17,11 @@ statically against the Spark schema and every check becomes a Column:
                      ``index.py:24-25``).
 
 :func:`_lower` produces, per chain depth, one nullable violation column per
-flat check plus one ``array<violation>`` per higher-order-function walk. Two
-assemblies consume the same lowering:
+flat check plus one ``array<violation>`` per higher-order-function walk. The
+Arrow-routed rules (``custom`` and Python-dialect regex,
+:func:`okay_spark.compat.custom_violation_arrays`) are level-0 arrays of the
+same lowering, so the two assemblies that consume it carry every rule and
+no caller adds them:
 
 - **explode** (:func:`exploded_violations`, behind ``validate_dataframe``):
   one primary chain of nested arrays (the one carrying the most schema
@@ -83,6 +86,7 @@ from typing import Callable, Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
+from . import compat
 from .paths import ELEM, ROOT, ROW_KEY, Name, Step, child_key, parent_and_child, parse_path
 from .rules import _STRING_TYPES, empty_violations, lower_checks, make_violation
 from .schema import CompiledSchema, FieldSpec
@@ -329,9 +333,9 @@ def _lower(
     elements get a generated row each (empty: one row per document).
 
     Returns the chain's array contexts (what each depth explodes), the flat
-    checks as ``(depth, violation-or-NULL column)`` and the HOF walks as
-    ``(depth, array<violation> column)``. Element columns of depth ``d`` are
-    named ``__ok_i{d}``/``__ok_e{d}``."""
+    checks as ``(depth, violation-or-NULL column)`` and the HOF walks and
+    Arrow UDFs as ``(depth, array<violation> column)``. Element columns of
+    depth ``d`` are named ``__ok_i{d}``/``__ok_e{d}``."""
     fields = list(compiled.fields.items())
     chain_dtypes = _resolve_chain(df_schema, chain)
 
@@ -435,6 +439,11 @@ def _lower(
             )
             scalar_checks.extend((d, c) for c in checks)
             dyn_arrays.extend((d, a) for a in arrays)
+
+    # ---- Arrow-routed rules (custom, Python-dialect regex) -----------------------
+    # Each UDF takes a whole top-level column, so it belongs to level 0: the
+    # fire-once guard emits it on one generated row per document.
+    dyn_arrays.extend((0, a) for a in compat.custom_violation_arrays(df_schema, compiled))
     return arr_ctxs, scalar_checks, dyn_arrays
 
 
@@ -497,8 +506,9 @@ def exploded_violations(df: DataFrame, compiled: CompiledSchema) -> DataFrame:
 
 
 def row_violations(df_schema: StructType, compiled: CompiledSchema) -> Column:
-    """Row assembly: the native battery (no ``custom`` or Arrow-routed rule
-    bodies) as ONE non-null ``array<violation>`` Column per input row."""
+    """Row assembly: the whole battery as ONE non-null ``array<violation>``
+    Column per input row (``engine.violations_array``). Exploding it yields
+    the multiset of violations ``engine.validate_dataframe`` reports."""
     _, scalar_checks, dyn_arrays = _lower(df_schema, compiled, [])
     return _checks_array([c for _, c in scalar_checks], [a for _, a in dyn_arrays])
 

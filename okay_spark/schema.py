@@ -35,10 +35,6 @@ from typing import Any, Callable
 
 from .errors import SchemaError
 
-VALID_TYPES = frozenset(
-    {"any", "bool", "custom", "int", "list", "number", "object", "string"}
-)
-
 # Regex constructs that exist only in Python's `re` dialect (or carry
 # different semantics in Java's): named groups/backrefs `(?P<..>`/`(?P=..)`,
 # comments `(?#...)`, conditional groups `(?(id)...)`, Python-only inline
@@ -332,9 +328,13 @@ def compile_schema(schema_fn: Callable[[], None]) -> CompiledSchema:
 _compile_cache: dict[Any, CompiledSchema] = {}
 
 
-def compile_cached(schema_fn: Callable[[], None]) -> CompiledSchema:
+def compile_cached(schema_fn: Callable[[], None] | CompiledSchema) -> CompiledSchema:
     """Compile-once cache keyed by schema-callable identity, wrapping any
-    error like the reference's validator (``validator.py:26-32``)."""
+    error like the reference's validator (``validator.py:26-32``). A
+    :class:`CompiledSchema` is returned unchanged, so every entry point that
+    takes either form coerces it here."""
+    if isinstance(schema_fn, CompiledSchema):
+        return schema_fn
     if schema_fn not in _compile_cache:
         try:
             _compile_cache[schema_fn] = compile_schema(schema_fn)

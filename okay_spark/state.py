@@ -297,7 +297,7 @@ def run_resumable_validation(
     instead of re-validating the source.
     """
     spark = df.sparkSession
-    compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
+    compiled = compile_cached(schema)
     fp = schema_fingerprint(compiled)
 
     done = completed_partitions(spark, lineage_target, snapshot, fp)

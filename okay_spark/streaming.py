@@ -22,13 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .engine import validate_dataframe, violations_array
-from .schema import CompiledSchema, compile_cached
+from .schema import compile_cached
 
 
 def validate_stream(stream_df: DataFrame, schema, *, id_cols=None) -> DataFrame:
     """Violations stream from a streaming DataFrame: identical semantics to
     the batch battery (same expression tree), stateless, no shuffle."""
-    compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
+    compiled = compile_cached(schema)
     return validate_dataframe(stream_df, compiled, id_cols=id_cols)
 
 
@@ -139,7 +139,7 @@ def running_violation_totals(
     Checkpoints written by the earlier ``applyInPandasWithState`` form of
     this operator hold a different state layout and cannot be resumed.
     """
-    compiled = schema if isinstance(schema, CompiledSchema) else compile_cached(schema)
+    compiled = compile_cached(schema)
     n_viol = F.size(violations_array(stream_df.schema, compiled))
     nv = F.col("_nv")
     return (

@@ -170,6 +170,36 @@ def test_custom_rule_arrow_udf_takes_the_column(spark):
     ]
 
 
+def test_custom_rule_battery_scans_its_input_once(spark, tmp_path):
+    """The Arrow-routed rules are part of the one battery plan: with a
+    custom rule, ``validate_dataframe`` over a parquet table reads the file
+    once, with no second branch unioned in for the Python rules."""
+    from okay_spark import required
+    from okay_spark.messages import Message
+
+    def short(field, value):
+        return Message(type="too_short", field=field) if len(value) < 3 else None
+
+    def schema():
+        required("doc_id", type="int")
+        required("n", type="int", min=1)
+        required("s", type="custom", validator=short)
+
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [(i, i % 4, "x" * (i % 5)) for i in range(10)], "doc_id bigint, n bigint, s string"
+    ).write.parquet(path)
+    out = validate_dataframe(spark.read.parquet(path), schema)
+    plan = _final_plan(out)
+    assert plan.count("FileScan") == 1, plan
+    assert "Union" not in plan, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert sorted((r["doc_id"], r["rule"]) for r in out.collect()) == sorted(
+        [(i, "too_short") for i in (0, 1, 2, 5, 6, 7)]
+        + [(i, "number_too_small") for i in (0, 4, 8)]
+    )
+
+
 def test_validate_json_arrow_udf_takes_only_the_json_column(spark):
     """validate_json runs one Arrow UDF over the JSON column alone; the id
     columns stay in the JVM and meet its output in a Generate."""
